@@ -12,9 +12,9 @@ import graft.sources.Tables
   * reference's actor↔movie graph, with customer 0 as the query root.
   *
   * These queries run through the REAL engine path
-  * ([[graft.query.BipartiteExpand]]) — the driver-loop BFS with
-  * visited-set anti-join — not a hand-inlined SQL translation, so the
-  * oracle checks the engine itself.
+  * ([[graft.query.BipartiteExpand]]) — the driver-loop BFS with its
+  * driver-held visited set — not a hand-inlined SQL translation, so
+  * the oracle checks the engine itself.
   */
 object GraphQueries {
 
@@ -56,8 +56,8 @@ object GraphQueries {
     * level's big joins are co-partitioned and only frontier-sized
     * aggregates shuffle (`ShufflePathPlanSpec` pins it). Same oracle
     * as `q_graph_level3`, headline so the driver bench times both
-    * paths side by side every round (the default-auto rows above pick
-    * broadcast themselves at this scale — `FrontierModeSpec`). */
+    * paths side by side every round (the default-auto rows above hold
+    * their frontiers on the driver at this scale — `FrontierModeSpec`). */
   private def graphLevel3Shuffle(s: SparkSession, d: String): DataFrame =
     BipartiteExpand.expand(s, copurchaseEdges(s, d), "cust", "part", lit(0L), 3,
         dedupEdges = true, mode = BipartiteExpand.FrontierMode.Shuffle)

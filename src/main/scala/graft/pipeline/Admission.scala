@@ -120,28 +120,39 @@ object Admission {
     * vector decision chains — are submitted from a small driver pool
     * and back-fill each other's scheduling gaps and task tails. The
     * pool is created PER CALL (threads inherit the caller's job
-    * group/description exactly; nothing leaks across queries) and the
-    * first failure is rethrown with its original exception. */
-  private def inParallel[A](work: Seq[() => A]): Seq[A] =
+    * group/description exactly; nothing leaks across queries). The
+    * first failure, in completion order, cancels the siblings' Spark
+    * jobs (every thunk tags its jobs with one per-call tag) and waits
+    * for every sibling to finish before it is rethrown with its
+    * original exception, so no state write outlives a failed call. */
+  private[graft] def inParallel[A](s: SparkSession)(work: Seq[() => A]): Seq[A] =
     if (work.sizeIs <= 1) work.map(_())
     else {
+      val sc = s.sparkContext
+      val tag = s"graft-parallel-${java.util.UUID.randomUUID()}"
       val pool = java.util.concurrent.Executors.newFixedThreadPool(work.size)
+      val done = new java.util.concurrent.ExecutorCompletionService[A](pool)
       try {
         val futs = work.map(w =>
-          pool.submit(new java.util.concurrent.Callable[A] {
-            def call(): A = w()
+          done.submit(new java.util.concurrent.Callable[A] {
+            def call(): A = {
+              sc.addJobTag(tag)
+              try w() finally sc.removeJobTag(tag)
+            }
           }))
-        futs.map(f =>
-          try f.get()
-          catch { case e: java.util.concurrent.ExecutionException =>
-            throw e.getCause
-          })
+        try work.foreach(_ => done.take().get())
+        catch { case e: java.util.concurrent.ExecutionException =>
+          sc.cancelJobsWithTag(tag)
+          futs.foreach(f => scala.util.Try(f.get()))
+          throw e.getCause
+        }
+        futs.map(_.get())
       } finally pool.shutdown()
     }
 
   /** Two-sided [[inParallel]] with precise types. */
-  private def par2[A, B](a: () => A, b: () => B): (A, B) = {
-    val r = inParallel[Any](Seq(a, b))
+  private def par2[A, B](s: SparkSession, a: () => A, b: () => B): (A, B) = {
+    val r = inParallel[Any](s)(Seq(a, b))
     (r(0).asInstanceOf[A], r(1).asInstanceOf[B])
   }
 
@@ -597,7 +608,7 @@ object Admission {
       (corpusSegFrames ++ corpusIncFrames).reduceOption(_ unionByName _).foreach(
         _.write.mode("overwrite").parquet(basePath(root, "corpus", newId)))
     }
-    inParallel(keyedFolds :+ corpusFold)
+    inParallel(s)(keyedFolds :+ corpusFold)
     val extraFolded = foldIdsByKind.values.flatten.toSet -- unfolded.toSet
     val segments =
       if (major) Seq(Segment(newId, st.folded ++ unfolded))
@@ -749,7 +760,7 @@ object Admission {
     // (guide §2.6). `digests` stays LAST and alone: it is [[compact]]'s
     // increment-commit marker, so digests-committed ⇒ every other kind
     // committed too — the barrier before it preserves that contract.
-    inParallel[Unit](Seq(
+    inParallel[Unit](s)(Seq(
       () => labeled(s, s"admit $incId: write corpus") {
         newDocs.join(admittedIds, Seq(idCol), "left_semi")
           .write.mode("overwrite").parquet(s"$root/corpus/inc=$incId")
@@ -949,7 +960,7 @@ object Admission {
     // data past `freshKeys` — overlap them (guide §2.6): the text
     // chain is one heavy tokenize job, the vector chain a string of
     // small codebook jobs whose wall clock is mostly scheduling.
-    val (incIndex, (incVecs, incSem, incHasVecs, cb, cbNew)) = par2(
+    val (incIndex, (incVecs, incSem, incHasVecs, cb, cbNew)) = par2(s,
       () => labeled(s, s"admit $incId: inc-index") {
         incIndexOf(freshKeys).localCheckpoint()
       },
@@ -1061,7 +1072,7 @@ object Admission {
       () => labeled(s, s"admit $incId: sem within losers") {
         withinSemLosers.localCheckpoint()
       })
-    val phase1 = inParallel(legs ++ writes)
+    val phase1 = inParallel(s)(legs ++ writes)
     val admittedIds = phase1(0).asInstanceOf[DataFrame]
       .join(phase1(1).asInstanceOf[DataFrame]
         .union(phase1(2).asInstanceOf[DataFrame]), Seq(idCol), "left_anti")

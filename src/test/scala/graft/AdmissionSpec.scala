@@ -213,4 +213,33 @@ class AdmissionSpec extends SparkSpec {
     assert(got == Seq(4L), s"doc 3 duplicates increment 2's content: $got")
     assert(Admission.corpus(spark, root).count() == 3)
   }
+
+  test("inParallel: the first failure cancels and awaits every sibling before it is rethrown") {
+    val running = new java.util.concurrent.atomic.AtomicInteger()
+    def sibling[A](body: => A): () => A = () => {
+      running.incrementAndGet()
+      try body finally running.decrementAndGet()
+    }
+    val boom = new IllegalStateException("injected failure")
+    val t0 = System.nanoTime()
+    val thrown = intercept[IllegalStateException] {
+      Admission.inParallel[Any](spark)(Seq(
+        () => { Thread.sleep(200); throw boom },
+        // a Spark job that would run ~60 s unless its job is cancelled
+        sibling(spark.range(0, 4, 1, 4).foreach { _ =>
+          val ctx = org.apache.spark.TaskContext.get()
+          val until = System.nanoTime() + 60L * 1000 * 1000 * 1000
+          while (!ctx.isInterrupted() && System.nanoTime() < until) Thread.sleep(20)
+        }),
+        // driver-side work that ignores cancellation: awaited, not abandoned
+        sibling { Thread.sleep(1500); 1 }))
+    }
+    val secs = (System.nanoTime() - t0) / 1e9
+    assert(thrown eq boom, "the original exception must be rethrown")
+    assert(running.get() == 0, s"${running.get()} sibling thunks outlived the failed call")
+    assert(secs >= 1.5, f"returned after $secs%.2f s, before the driver-side sibling ended")
+    assert(secs < 30, f"the sibling's Spark job was not cancelled ($secs%.1f s)")
+    // the success path is unchanged: results in input order
+    assert(Admission.inParallel[Int](spark)(Seq(() => 1, () => 2, () => 3)) == Seq(1, 2, 3))
+  }
 }

@@ -33,8 +33,12 @@ class DurableCheckpointSpec extends SparkSpec {
       .collect().map(_.getString(0)).toSet
     assert(local == Set("a0", "a1", "a2", "a3"))
     val dir = freshDir("bfs")
+    // Only distributed levels have lineage to cut: driver-held levels
+    // return local relations and write no checkpoint, so the knob is
+    // pinned on the forced distributed path.
     val durable = BipartiteExpand
       .expand(spark, edges, "name", "title", lit("a0"), 4,
+        mode = BipartiteExpand.FrontierMode.Shuffle,
         checkpointDir = Some(dir.toString))
       .collect().map(_.getString(0)).toSet
     assert(durable == local)

@@ -4,11 +4,12 @@ import org.apache.spark.sql.functions._
 import graft.query.BipartiteExpand
 import graft.query.BipartiteExpand.FrontierMode
 
-/** Pins the auto broadcast/shuffle frontier-path selection
-  * ([[BipartiteExpand.FrontierMode.Auto]]): the decision is PER LEVEL
-  * from the measured frontier count, the switch builds the shuffle
-  * orientations exactly once, and every mode returns the identical
-  * vertex set with no cache residue.
+/** Pins the auto driver-held/shuffle frontier-path selection
+  * ([[BipartiteExpand.FrontierMode.Auto]]): levels stay on the driver
+  * while what they collect fits both ceilings, the first level that
+  * would not switches to the shuffle path for the rest of the query,
+  * every mode returns the identical vertex set with no cache residue,
+  * and a driver-held level costs one bounded collect.
   */
 class FrontierModeSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
@@ -86,14 +87,41 @@ class FrontierModeSpec extends SparkSpec {
     assert(spark.sharedState.cacheManager.isEmpty)
   }
 
-  test("per-level probes cost one job barrier each (fused materialize-and-count)") {
-    // The absolute job count is AQE-fan-out noise; the stable signal is
-    // the MARGINAL cost of one more iterative level. Each level adds
-    // exactly one probe barrier (persist + count) plus its two hop
-    // joins' stage jobs; the round-5 shape spent TWO barriers per level
-    // (localCheckpoint, then isEmpty). Pin the marginal job cost of
-    // level 4 over level 3 so a regression re-splitting the probe
-    // (or adding driver-side actions per level) trips it.
+  test("a frontier too large to inline is broadcast from the driver: same answer as shuffle") {
+    spark.catalog.clearCache() // see above
+    import spark.implicits._
+    // root 0 shares part i with customer i (i = 1..n); customer i shares
+    // part n+i with customer n+i — level 2's frontier is n customers,
+    // above the inline limit, and every level stays small
+    val n = 3000L
+    val g = (1L to n).flatMap(i =>
+      Seq((0L, i), (i, i), (i, n + i), (n + i, n + i))).toDF("cust", "part")
+    def run(mode: FrontierMode): (Set[Long], Set[(Long, Long, Long)]) = {
+      val x = BipartiteExpand.expandWithEdges(spark, g, "cust", "part", lit(0L), 3,
+        mode = mode)
+      (x.vertices.collect().map(_.getLong(0)).toSet,
+        x.edges.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet)
+    }
+    val modes = scala.collection.mutable.ArrayBuffer[(Int, Boolean)]()
+    val vs = BipartiteExpand.expand(spark, g, "cust", "part", lit(0L), 3,
+      onLevelMode = (l, b) => modes += ((l, b))).collect().map(_.getLong(0)).toSet
+    assert(modes.toList == List((1, true), (2, true)), s"modes: $modes")
+    assert(vs == (0L to 2 * n).toSet)
+    val (evs, es) = run(FrontierMode.Auto())
+    assert(evs == vs)
+    assert(es.size == 3 * n, s"${es.size} edges") // (0,i,i), (i,i,0), (i,n+i,n+i)
+    assert((evs, es) == run(FrontierMode.Shuffle))
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
+  test("a driver-held level costs one bounded collect: at most 4 jobs") {
+    // The stable signal is the MARGINAL cost of one more level: a
+    // driver-held level is one bounded collect — the frontier's
+    // broadcast from the driver, the hop-1 broadcast, the distinct's
+    // shuffle stage and the result stage, each an AQE job. The round-5
+    // shape spent two probe barriers per level, and the persist+count
+    // shape that followed it up to 10 jobs. A regression that adds a
+    // per-level probe or action trips this.
     val sc = spark.sparkContext
     def jobsAt(level: Int): Int = {
       val group = s"frontier-jobcount-$level-${System.nanoTime()}"
@@ -108,8 +136,8 @@ class FrontierModeSpec extends SparkSpec {
     val l3 = jobsAt(3)
     val l4 = jobsAt(4)
     info(s"jobs: level3=$l3 level4=$l4 marginal=${l4 - l3}")
-    assert(l4 - l3 <= 10,
+    assert(l4 - l3 >= 1 && l4 - l3 <= 4,
       s"one extra BFS level cost ${l4 - l3} jobs (level3=$l3, level4=$l4) — " +
-      "expected one fused probe barrier + hop-join stage fan-out")
+      "expected one bounded collect")
   }
 }

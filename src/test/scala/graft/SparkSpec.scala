@@ -58,21 +58,29 @@ object ImdbOracle {
   /** BFS with the reference's level semantics (level=1 ⇒ root only,
     * each level = one two-hop expansion), global visited dedup. */
   def expand(edges: Set[(String, String)], root: String, byName: Boolean,
-      level: Int): Set[String] = {
+      level: Int): Set[String] =
+    expandWithEdges(edges, root, byName, level)._1
+
+  /** The same BFS plus its vertex edges: every (u, v) pair, u ≠ v, with
+    * u in an expanded frontier and v sharing a neighbour with u. */
+  def expandWithEdges(edges: Set[(String, String)], root: String,
+      byName: Boolean, level: Int): (Set[String], Set[(String, String)]) = {
     val fwd = (if (byName) edges.map(e => (e._2, e._1)) else edges)
       .groupMap(_._1)(_._2)
     val rev = (if (byName) edges else edges.map(e => (e._2, e._1)))
       .groupMap(_._1)(_._2)
     val exists = fwd.contains(root)
-    if (!exists) return Set.empty
+    if (!exists) return (Set.empty, Set.empty)
     var visited = Set(root)
     var frontier = Set(root)
+    var found = Set.empty[(String, String)]
     for (_ <- 1 until level if frontier.nonEmpty) {
-      val mids = frontier.flatMap(fwd.getOrElse(_, Set.empty))
-      val next = mids.flatMap(rev.getOrElse(_, Set.empty))
-      frontier = next -- visited
+      val pairs = for (u <- frontier; m <- fwd.getOrElse(u, Set.empty);
+        v <- rev.getOrElse(m, Set.empty) if v != u) yield (u, v)
+      found ++= pairs
+      frontier = pairs.map(_._2) -- visited
       visited = visited ++ frontier
     }
-    visited
+    (visited, found)
   }
 }

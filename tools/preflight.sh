@@ -13,15 +13,30 @@ cd "$(dirname "$0")/.."
 
 SF_DIR="${1:-/root/testdata/sf0.01}"
 OUT_DIR="$(mktemp -d /tmp/graft_preflight.XXXXXX)"
-trap 'rm -rf "$OUT_DIR"' EXIT
+VERIFY_LOG="$(mktemp /tmp/graft_preflight_verify.XXXXXX)"
+trap 'rm -rf "$OUT_DIR" "$VERIFY_LOG"' EXIT
 
 echo "[preflight] 1/3 sbt test"
 sbt -batch test 2>&1 | tail -4
 
 echo "[preflight] 2/3 graft.Verify $SF_DIR -> $OUT_DIR"
-sbt -batch "runMain graft.Verify $SF_DIR $OUT_DIR" 2>&1 |
-  grep -E '\[verify\].*failed' && {
-    echo "[preflight] FAIL: Verify reported per-query failures"; exit 1; } || true
+# Verify exits 0 even when queries fail, so the gate reads its
+# "[verify] ok N/M" summary: a missing line means Verify crashed.
+if ! sbt -batch "runMain graft.Verify $SF_DIR $OUT_DIR" >"$VERIFY_LOG" 2>&1; then
+  tail -20 "$VERIFY_LOG"
+  echo "[preflight] FAIL: Verify crashed"; exit 1
+fi
+grep -E '\[verify\].*failed' "$VERIFY_LOG" || true
+SUMMARY="$(grep -oE '\[verify\] ok [0-9]+/[0-9]+' "$VERIFY_LOG" | tail -1 || true)"
+if [ -z "$SUMMARY" ]; then
+  tail -20 "$VERIFY_LOG"
+  echo "[preflight] FAIL: Verify printed no summary line (crashed?)"; exit 1
+fi
+OK_N="${SUMMARY#\[verify\] ok }"
+if [ "${OK_N%/*}" != "${OK_N#*/}" ]; then
+  echo "[preflight] FAIL: $SUMMARY queries succeeded"; exit 1
+fi
+echo "$SUMMARY"
 
 echo "[preflight] 3/3 DuckDB oracle compare"
 python3 tools/local_verify.py "$SF_DIR" "$OUT_DIR" | tail -3
