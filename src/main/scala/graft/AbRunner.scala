@@ -52,17 +52,7 @@ object AbRunner {
   def main(args: Array[String]): Unit = {
     require(args.length == 3, "usage: AbRunner <q1,q2,...> <sfDir> <runs>")
     val names = args(0).split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-ab")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-ab", GraftSession.cpus(32))
     try {
       val times = run(spark, names, args(1), args(2).toInt)
       val body = names.map { n =>

@@ -373,6 +373,16 @@ object Bench {
     }
   }
 
+  /** The headline fields of both artifact lines: `complete` says every
+    * headline query produced timings, and `value` (the total of their
+    * medians) is `null` when one did not, because a sum over the
+    * survivors reads as a speedup. */
+  def totalFields(headline: Seq[QResult]): String = {
+    val complete = headline.forall(_.ok)
+    val total = if (complete) f"${headline.map(_.median).sum}%.3f" else "null"
+    s""""value":$total,"complete":$complete"""
+  }
+
   /** Run `queries` against `dir`: one untimed warm-up each, then
     * `runs` round-robin measurement passes. Failed runs record the
     * error and contribute no time. `loadSampler` is called once
@@ -460,29 +470,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // The engine's session default, not a bench trick: Spark's
-      // generated-class cache holds 100 entries, and one composed
-      // pipeline run alone emits more wholestage-codegen units than
-      // that, so EVERY run re-Janino-compiles and re-JITs the same
-      // sources (measured 6-8 s of compiler-thread time per
-      // q_pipeline_e2e repeat at steady state — the round-6 p90/p50
-      // spread of that query). 5000 entries holds the full operator
-      // catalog; measured effect: q_pipeline_e2e steady-state repeats
-      // 6.5-7.0 s -> 4.4-5.8 s and JIT churn 6-8 s -> 2-4 s per run
-      // (see CHANGES_r07.md). The same knob matters on a real
-      // cluster: the cache is per-executor JVM, and a long-lived
-      // session running this catalog cycles it just the same.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-bench", GraftSession.cpus(32))
 
     val headline = Catalog.all.filter(_.headline)
     // slope-tier queries (deliberate exact all-pairs baselines) are
@@ -520,7 +508,7 @@ object Bench {
       r.name -> jmap(Seq("p10" -> jnum(ts.head), "p50" -> jnum(r.median),
         "p90" -> jnum(ts.last)))
     })
-    val total = ok.map(_.median).sum
+    val totalPart = totalFields(results)
 
     // Validity (docs/bench_protocol.md): per-query worst sampled
     // loadavg (raw + external residual), the queries whose numbers
@@ -822,9 +810,9 @@ object Bench {
     //    so the stdout form is sized to survive that window while
     //    still carrying everything a cross-round comparison grades.
     val fullLine =
-      s"""{"metric":"total","value":${jnum(total)},"unit":"sec","queries":$qs,"quantiles":$quant$loadPart$validPart$errPart$extraPart$sf2Part$progPart$abPart,$loadavgPart}"""
+      s"""{"metric":"total",$totalPart,"unit":"sec","queries":$qs,"quantiles":$quant$loadPart$validPart$errPart$extraPart$sf2Part$progPart$abPart,$loadavgPart}"""
     val compactLine =
-      s"""{"metric":"total","value":${jnum(total)},"unit":"sec","queries":$qs$xloadPart$validPart$errPart$abCompact,$loadavgPart}"""
+      s"""{"metric":"total",$totalPart,"unit":"sec","queries":$qs$xloadPart$validPart$errPart$abCompact,$loadavgPart}"""
     println(compactLine)
     // Best-effort: an unwritable path must not mask the error summary
     // and nonzero exit below (stdout already carries the compact line).

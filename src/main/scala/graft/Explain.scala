@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit main: prints the formatted physical plan of selected
   * queries so scan pushdown (PushedFilters / ReadSchema), join
   * strategies and codegen spans can be inspected per round. */
@@ -14,12 +12,7 @@ object Explain {
         "q_embed_neardup_lsh", "q_range_join_binned", "q_asof_join",
         "q_tfidf", "q_pipeline_e2e", "q_stratified_sample",
         "q_weighted_sample", "q_approx_percentiles", "q_incremental_lsh")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession("graft-explain", 4, logLevel = "ERROR")
     names.foreach { n =>
       println(s"===== $n =====")
       Catalog.byName(n).fn(spark, sfDir).explain("formatted")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.ingest.EdgeBuilder
 import graft.output.Dot
 import graft.query.CoStar
@@ -27,18 +26,9 @@ object Main {
     }
     val level = opts.getOrElse("--level", "2").toInt
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-costar")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // engine session default — rationale at Bench.scala (codegen
-      // class cache must hold the full operator catalog)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SPARK_MASTER is a deployment setting: the CLI may run on a cluster
+    val spark = GraftSession("graft-costar", GraftSession.cpus(32),
+      master = sys.env.getOrElse("SPARK_MASTER", "local[*]"))
 
     val t0 = System.nanoTime()
     val edges = EdgeBuilder.materialize(EdgeBuilder.edges(spark,

@@ -15,17 +15,20 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   * (preference order (b) from the build brief: custom `Expression`
   * over UDF). Falls back to an interpreted path when codegen is off.
   *
-  * Inputs must be `array<double>` (cast at the call site); element
-  * nulls are not expected in embedding data and read as 0-filled
-  * primitive slots, matching `ArrayData.toDoubleArray` semantics.
+  * Inputs must be `array<double>` (cast at the call site). The result
+  * is NULL for arrays of different lengths or with a null element, as
+  * the `aggregate(zip_with(...))` form gives (see
+  * [[VectorFunctions.raggedOrNull]]).
   */
 case class VecDot(left: Expression, right: Expression) extends BinaryExpression {
   override def dataType: DataType = DoubleType
+  override def nullable: Boolean = true
 
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
+    if (VectorFunctions.raggedOrNull(x, y)) return null
+    val n = x.numElements()
     var s = 0.0
     var i = 0
     while (i < n) {
@@ -41,12 +44,16 @@ case class VecDot(left: Expression, right: Expression) extends BinaryExpression 
       val n = ctx.freshName("n")
       val s = ctx.freshName("s")
       s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $s = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $s += $a.getDouble($i) * $b.getDouble($i);
+         |if (graft.functions.VectorFunctions.raggedOrNull($a, $b)) {
+         |  ${ev.isNull} = true;
+         |} else {
+         |  int $n = $a.numElements();
+         |  double $s = 0.0;
+         |  for (int $i = 0; $i < $n; $i++) {
+         |    $s += $a.getDouble($i) * $b.getDouble($i);
+         |  }
+         |  ${ev.value} = $s;
          |}
-         |${ev.value} = $s;
        """.stripMargin
     })
 
@@ -58,13 +65,16 @@ case class VecDot(left: Expression, right: Expression) extends BinaryExpression 
 /** Squared L2 norm — the single-traversal form of `VecDot(x, x)`.
   * Exists because codegen evaluates each child of a BinaryExpression
   * independently: `vec_dot(x, x)` materializes/loads the array twice,
-  * while this reads it once. Produced by [[SelfDotToNorm]]. */
+  * while this reads it once. Produced by [[SelfDotToNorm]], so it keeps
+  * `VecDot`'s NULL for an array with a null element. */
 case class VecNorm2(child: Expression)
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
   override def dataType: DataType = DoubleType
+  override def nullable: Boolean = true
 
   override def nullSafeEval(a: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
+    if (VectorFunctions.hasNull(x)) return null
     var s = 0.0
     var i = 0
     while (i < x.numElements()) {
@@ -81,12 +91,16 @@ case class VecNorm2(child: Expression)
       val s = ctx.freshName("s")
       val v = ctx.freshName("v")
       s"""
-         |double $s = 0.0;
-         |for (int $i = 0; $i < $a.numElements(); $i++) {
-         |  double $v = $a.getDouble($i);
-         |  $s += $v * $v;
+         |if (graft.functions.VectorFunctions.hasNull($a)) {
+         |  ${ev.isNull} = true;
+         |} else {
+         |  double $s = 0.0;
+         |  for (int $i = 0; $i < $a.numElements(); $i++) {
+         |    double $v = $a.getDouble($i);
+         |    $s += $v * $v;
+         |  }
+         |  ${ev.value} = $s;
          |}
-         |${ev.value} = $s;
        """.stripMargin
     })
 
@@ -102,14 +116,17 @@ case class VecNorm2(child: Expression)
   * whole-stage codegen); the accumulation order here is the identical
   * left fold (s += (aᵢ−bᵢ)² in index order, starting from 0.0), so
   * every result is BIT-IDENTICAL to the lambda form and the DuckDB
-  * oracles that unroll it — argmin/rounding decisions cannot move. */
+  * oracles that unroll it — argmin/rounding decisions cannot move.
+  * Ragged or null-element inputs give NULL, as the lambda form does. */
 case class VecSqDist(left: Expression, right: Expression) extends BinaryExpression {
   override def dataType: DataType = DoubleType
+  override def nullable: Boolean = true
 
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
+    if (VectorFunctions.raggedOrNull(x, y)) return null
+    val n = x.numElements()
     var s = 0.0
     var i = 0
     while (i < n) {
@@ -127,13 +144,17 @@ case class VecSqDist(left: Expression, right: Expression) extends BinaryExpressi
       val s = ctx.freshName("s")
       val d = ctx.freshName("d")
       s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $s = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $d = $a.getDouble($i) - $b.getDouble($i);
-         |  $s += $d * $d;
+         |if (graft.functions.VectorFunctions.raggedOrNull($a, $b)) {
+         |  ${ev.isNull} = true;
+         |} else {
+         |  int $n = $a.numElements();
+         |  double $s = 0.0;
+         |  for (int $i = 0; $i < $n; $i++) {
+         |    double $d = $a.getDouble($i) - $b.getDouble($i);
+         |    $s += $d * $d;
+         |  }
+         |  ${ev.value} = $s;
          |}
-         |${ev.value} = $s;
        """.stripMargin
     })
 
@@ -225,11 +246,10 @@ case class SrpBuckets(child: Expression, planes: Array[Double],
 
 /** Optimizer rule: `vec_dot(x, x)` → `vec_norm2(x)` when both sides
   * are semantically the same expression — halves array evaluation in
-  * every norm computation (used by all cosine queries). Injectable via
-  * [[GraftExtensions]] at session build, or added to an existing
-  * session through `experimental.extraOptimizations` (what
-  * [[VectorFunctions.register]] does, since the driver owns session
-  * construction). */
+  * every norm computation (used by all cosine queries). Added to the
+  * session through `experimental.extraOptimizations` by
+  * [[VectorFunctions.register]], since the caller owns session
+  * construction. */
 object SelfDotToNorm
     extends org.apache.spark.sql.catalyst.rules.Rule[
       org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] {
@@ -240,38 +260,26 @@ object SelfDotToNorm
     }
 }
 
-/** SparkSessionExtensions entry point for sessions the caller builds:
-  * `SparkSession.builder().withExtensions(new GraftExtensions)...`. */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier(VectorFunctions.fnName),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[VecDot].getName, VectorFunctions.fnName),
-      (exprs: Seq[Expression]) => VecDot(exprs(0), exprs(1))))
-    e.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier(VectorFunctions.sqDistName),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[VecSqDist].getName, VectorFunctions.sqDistName),
-      (exprs: Seq[Expression]) => VecSqDist(exprs(0), exprs(1))))
-    e.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier(StringDistance.fnName),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[HammingDist].getName, StringDistance.fnName),
-      (exprs: Seq[Expression]) => HammingDist(exprs(0), exprs(1))))
-    e.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier(BitFunctions.mortonName),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[MortonInterleave].getName, BitFunctions.mortonName),
-      BitFunctions.mortonBuilder(_)))
-    e.injectOptimizerRule(_ => SelfDotToNorm)
-  }
-}
-
 object VectorFunctions {
   val fnName = "graft_vec_dot"
   val srpName = "graft_srp_buckets"
   val sqDistName = "graft_vec_sqdist"
+
+  /** True when `a` holds a null element. */
+  def hasNull(a: ArrayData): Boolean = {
+    var i = 0
+    while (i < a.numElements()) {
+      if (a.isNullAt(i)) return true
+      i += 1
+    }
+    false
+  }
+
+  /** True when a pairwise fold over `a` and `b` is NULL in the
+    * `aggregate(zip_with(...))` form: `zip_with` pads the shorter array
+    * with nulls, and one null term makes the whole fold NULL. */
+  def raggedOrNull(a: ArrayData, b: ArrayData): Boolean =
+    a.numElements() != b.numElements() || hasNull(a) || hasNull(b)
 
   /** Idempotently register the expression with the session's function
     * registry (the supported way to reach a custom Expression from the

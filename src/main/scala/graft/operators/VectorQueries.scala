@@ -408,13 +408,6 @@ object VectorQueries {
   private def ivfTrained(s: SparkSession, d: String): DataFrame =
     ivfTrainedSearch(s, d)
 
-  /** Trained assignment (vec_id, cluster) of an arbitrary corpus —
-    * spec diagnostic for coarse-cell alignment measurements. */
-  private[graft] def diagTrainedAssign(s: SparkSession,
-      emb: DataFrame): DataFrame =
-    trainedCoarse(s, emb)._2.select(col("vec_id"),
-      col("cluster").cast("int").as("cluster"))
-
   /** The 2-round coarse training + probe, unrolled as DuckDB CTEs —
     * shared by `q_ivf_trained` and `q_ivfpq_search` so the trained
     * quantizer the oracle replays is ONE definition (CTE names are

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   * `q_triangle_count` / `q_kcore` / `q_sssp` / `q_link_predict` /
   * `q_pagerank`: the same algorithm cores, parameterized over ANY
   * canonical undirected edge list (`a < b`, one row per edge), so a
-  * user can run them on their own graph and [[graft.tools.GraphScale]]
+  * user can run them on their own graph and [[graft.tools.Scale]]
   * can measure them on replicated corpora. The catalog rows in
   * [[graft.operators.GraphQueries]] delegate here — the oracle gate
   * checks THESE implementations.

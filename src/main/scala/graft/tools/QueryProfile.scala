@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Per-job/stage profiler for catalog queries (optimization-round
   * diagnostic; guide §1 "measure first"). For each named query: one
@@ -20,17 +19,7 @@ object QueryProfile {
     val sfDir = args(0)
     val names = args(1).split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val runs = if (args.length > 2) args(2).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-profile")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession("graft-profile", graft.GraftSession.cpus(32))
 
     final case class JobRow(id: Int, desc: String, var ms: Long = -1,
         var stages: Seq[Int] = Nil)

@@ -39,6 +39,16 @@ class BenchHarnessSpec extends SparkSpec {
     assert(rs.exists(_.err.isDefined))
   }
 
+  test("one broken headline query: the artifact says incomplete and " +
+      "prints no partial total") {
+    val rs = Bench.measure(spark, "/unused", Seq(okQ, runTimeBroken), runs = 2)
+    assert(rs.exists(_.ok), "the healthy query still has a median")
+    assert(Bench.totalFields(rs) == "\"value\":null,\"complete\":false")
+    val healthy = Bench.measure(spark, "/unused", Seq(okQ), runs = 2)
+    assert(Bench.totalFields(healthy) ==
+      f"\"value\":${healthy.head.median}%.3f,\"complete\":true")
+  }
+
   test("all-healthy run has no errors and full timing sets") {
     val rs = Bench.measure(spark, "/unused", Seq(okQ), runs = 3)
     assert(rs.forall(_.err.isEmpty))
