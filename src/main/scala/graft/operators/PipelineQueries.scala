@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Q
 import graft.pipeline.Curation
-import graft.sources.Tables
+import graft.sources.{Parquet, Tables}
 
 /** The composed curation pipeline as a gate row ([[graft.pipeline
   * .Curation]]): every stage is individually oracle-checked elsewhere
@@ -152,7 +152,7 @@ object PipelineQueries {
       Curation.run(Tables.documents(s, d))
         .withColumn("sink_scale", org.apache.spark.sql.functions.lit(scale)),
       dest)
-    s.read.parquet(dest)
+    Parquet.read(s, dest)
       .select("source", "bin", "doc_id", "chunk_id", "n_tokens",
         "chunk_md5", "sink_scale")
       .orderBy("source", "bin", "doc_id", "chunk_id")
@@ -457,7 +457,7 @@ object PipelineQueries {
   /** The pruned day's aggregate, shared by the gate row (post-write
     * read-back) and the spec's plan pin. */
   def prunedDayAgg(s: SparkSession, dest: String): DataFrame =
-    s.read.parquet(dest)
+    Parquet.read(s, dest)
       .filter(col("event_date") === "2024-01-15")
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_events"),
@@ -510,7 +510,7 @@ object PipelineQueries {
     // whole, never a partial directory — CommittedTableSpec pins it
     val tbl = s"$dest/comp"
     graft.pipeline.CommittedTable.commit(s, tbl,
-      s.read.parquet(s"$dest/frag"), _.coalesce(nOut))
+      Parquet.read(s, s"$dest/frag"), _.coalesce(nOut))
     val comp = files(graft.pipeline.CommittedTable.dataDir(s, tbl))
     // degenerate single-fragment input (round-13 advice): with one
     // input file the nOut cap yields nOut = 1, so "fewer files" is

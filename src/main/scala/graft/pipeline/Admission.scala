@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.dedup.Dedup
+import graft.sources.Parquet
 
 /** Daily-crawl admission loop — the composed incremental form of the
   * curation front half (reference analogue: the incremental ingest
@@ -165,18 +166,6 @@ object Admission {
     val prev = sc.getLocalProperty("spark.job.description")
     sc.setJobDescription(desc)
     try body finally sc.setJobDescription(prev)
-  }
-
-  /** First parquet data file under `dir` (recursive), if any — used to
-    * sniff the SCHEMA of stored state without assuming its layout. */
-  private def firstParquetFile(fs: FileSystem, dir: Path): Option[Path] = {
-    val it = fs.listFiles(dir, true)
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.getPath.getName.endsWith(".parquet") && f.getLen > 0)
-        return Some(f.getPath)
-    }
-    None
   }
 
   /** Keyed state kinds (bucketed segments). `index`/`digests` exist
@@ -598,13 +587,13 @@ object Admission {
     // inference would strip a numeric id's leading zeros)
     val corpusFold: () => Unit = () => labeled(s, s"compact: fold corpus -> s$newId") {
       val corpusIncFrames = foldIdsByKind("corpus").sorted
-        .map(id => s.read.parquet(s"$root/corpus/inc=$id")
+        .map(id => Parquet.read(s, s"$root/corpus/inc=$id")
           .withColumn("inc", lit(id)))
       val corpusSegFrames =
         if (!major) Nil
         else st.segments.map(seg => segDataPath(root, "corpus", seg))
           .filter(p => fs.exists(new Path(p)))
-          .map(s.read.parquet(_))
+          .map(Parquet.read(s, _))
       (corpusSegFrames ++ corpusIncFrames).reduceOption(_ unionByName _).foreach(
         _.write.mode("overwrite").parquet(basePath(root, "corpus", newId)))
     }
@@ -771,7 +760,7 @@ object Admission {
     labeled(s, s"admit $incId: write digests") {
       freshDigests.write.mode("overwrite").parquet(s"$root/digests/inc=$incId")
     }
-    s.read.parquet(s"$root/corpus/inc=$incId")
+    Parquet.read(s, s"$root/corpus/inc=$incId")
   }
 
   // ---------------------------------------------------------------------
@@ -922,7 +911,6 @@ object Admission {
     val nSub = (8 to 1 by -1).find(dim % _ == 0).get
     val subDim = dim / nSub
     val haveCb = pqcbCommitted(s, root)
-    val fs = fsOf(s, root)
     // Legacy-format guard (round-13 hardening): key on the SCHEMA of
     // the stored vecs rows, not on mere directory existence — a root
     // whose early increments carried zero embedding rows legitimately
@@ -930,16 +918,11 @@ object Admission {
     // trained codebook yet, and must NOT be bricked. Only rows that
     // actually store the round-11 float vector column `e` are the
     // un-mixable legacy state.
-    if (!haveCb) {
-      val legacyFile = Seq(s"$root/vecs", s"$root/vecs_base")
-        .map(new Path(_)).filter(fs.exists)
-        .flatMap(firstParquetFile(fs, _)).headOption
-      if (legacyFile.exists(f =>
-          s.read.parquet(f.toString).schema.fieldNames.contains("e")))
-        sys.error(s"$root holds pre-round-12 float-format vecs/ state " +
-          "(no pqcb/ codebook): PQ codes and legacy floats cannot mix — " +
-          "replay the increments with this binary or stay on the old one")
-    }
+    if (!haveCb && Parquet.footerSchema(s, s"$root/vecs", s"$root/vecs_base")
+        .exists(_.fieldNames.contains("e")))
+      sys.error(s"$root holds pre-round-12 float-format vecs/ state " +
+        "(no pqcb/ codebook): PQ codes and legacy floats cannot mix — " +
+        "replay the increments with this binary or stay on the old one")
     val seenIndex = readSeen(s, root, "index", idCol, incId)
     val seenDigests = readSeen(s, root, "digests", idCol, incId)
     val seenSem = readSeen(s, root, "semidx", idCol, incId)
@@ -1088,7 +1071,7 @@ object Admission {
     labeled(s, s"admit $incId: write digests") {
       freshDigests.write.mode("overwrite").parquet(s"$root/digests/inc=$incId")
     }
-    s.read.parquet(s"$root/corpus/inc=$incId")
+    Parquet.read(s, s"$root/corpus/inc=$incId")
   }
 
   /** Streaming admission — the continuous form of the daily loop
@@ -1148,30 +1131,37 @@ object Admission {
       .start()
 
   /** All admitted documents (original columns + `inc`): compacted
-    * corpus segments plus the not-yet-folded `inc=*` increments — the
-    * read stays O(live segments + unfolded increments), never
-    * O(all increments ever), matching the index/digest retention
-    * story. `inc` arrives as a real string column from segments and is
-    * tagged as a literal on increment dirs (partition-value inference
-    * would otherwise strip a numeric id's leading zeros). */
+    * corpus segments plus the not-yet-folded, COMMITTED `inc=*`
+    * increments — the read stays O(live segments + unfolded
+    * increments), never O(all increments ever), matching the
+    * index/digest retention story. An increment dir without the
+    * `_SUCCESS` marker is a crashed admit awaiting replay (the rule
+    * [[compact]] applies) and is not served. `inc` arrives as a real
+    * string column from segments and is tagged as a literal on
+    * increment dirs (partition-value inference would otherwise strip a
+    * numeric id's leading zeros). */
   def corpus(s: SparkSession, root: String): DataFrame = {
     val st = readManifest(s, root)
     val fs = fsOf(s, root)
     val segs = st.segments.map(seg => segDataPath(root, "corpus", seg))
       .filter(p => fs.exists(new Path(p)))
-      .map(s.read.parquet(_))
-    val incs = listIncs(s, root, "corpus")
+      .map(Parquet.read(s, _))
+    val incs = committedIncs(s, root, "corpus")
       .filterNot(coveredIncs(s, root, "corpus", st)).sorted
-      .map(id => s.read.parquet(s"$root/corpus/inc=$id")
+      .map(id => Parquet.read(s, s"$root/corpus/inc=$id")
         .withColumn("inc", lit(id)))
     (segs ++ incs).reduceOption(_ unionByName _)
       .getOrElse(sys.error(s"no admitted corpus under $root"))
   }
 
   /** The stored seen-signature index (idCol, band, sig, inc) —
-    * compacted segments plus the not-yet-folded increments. */
-  def index(s: SparkSession, root: String): DataFrame = {
+    * compacted segments plus the not-yet-folded increments. The
+    * increment dirs are read with the explicit schema, `inc` a string
+    * as in the segments, so an id like `0003` keeps its leading zeros
+    * (partition-value inference would turn it into the integer 3). */
+  def index(s: SparkSession, root: String, idCol: String = "doc_id"): DataFrame = {
     val st = readManifest(s, root)
+    val withInc = StructType(indexSchema(idCol).fields :+ StructField("inc", StringType))
     val segs = st.segments
       .filter(seg => segHasKind(s, root, "index", seg))
       .map(seg => segTable(s, root, "index", st, seg))
@@ -1180,13 +1170,11 @@ object Admission {
       .map(id => s"$root/index/inc=$id")
     val incs =
       if (dirs.isEmpty) Nil
-      else Seq(s.read.option("basePath", s"$root/index").parquet(dirs: _*)
-        .withColumn("inc", col("inc").cast("string")))
+      else Seq(s.read.option("basePath", s"$root/index").schema(withInc)
+        .parquet(dirs: _*))
     val frames = segs ++ incs
     frames match {
-      case Nil =>
-        s.createDataFrame(s.sparkContext.emptyRDD[Row], StructType(
-          indexSchema("doc_id").fields :+ StructField("inc", StringType)))
+      case Nil => s.createDataFrame(s.sparkContext.emptyRDD[Row], withInc)
       case head +: tail =>
         tail.foldLeft(head)((a, b) =>
           a.unionByName(b.select(a.columns.map(col).toIndexedSeq: _*)))

@@ -3,6 +3,8 @@ package graft.pipeline
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.sources.Parquet
+
 /** Atomic whole-table rewrites for the table-maintenance operators
   * (`q_compact_files`, `q_forget_user`) — the same commit discipline
   * [[Admission.compact]] already applies to admission state, extracted
@@ -103,11 +105,11 @@ object CommittedTable {
 
   /** Read the current committed generation. */
   def read(s: SparkSession, root: String): DataFrame =
-    s.read.parquet(dataDir(s, root))
+    Parquet.read(s, dataDir(s, root))
 
   /** Snapshot read of a specific committed generation (time travel). */
   def read(s: SparkSession, root: String, gen: Int): DataFrame =
-    s.read.parquet(dataDir(s, root, gen))
+    Parquet.read(s, dataDir(s, root, gen))
 
   /** Stage `df` as the next generation and commit it atomically.
     * `shape` customizes the staged write (e.g. `_.coalesce(n)` for a

@@ -70,5 +70,5 @@ object ImdbTsv {
     df.write.mode("overwrite").partitionBy(partCol).parquet(path)
 
   def readSnapshot(s: SparkSession, path: String): DataFrame =
-    s.read.parquet(path)
+    Parquet.read(s, path)
 }

@@ -16,7 +16,7 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    Parquet.read(spark, s"$dir/$name.parquet")
 
   /** Planned scan parallelism of `dir/name`, memoized per path: the
     * number of partitions the file source actually splits the table

@@ -18,14 +18,14 @@ import org.apache.spark.sql.types._
   */
 object EventStreams {
 
-  /** Physical schema of the events fixture at `path`, probed with a
-    * batch read so the streaming source (which requires an explicit
+  /** Physical schema of the events fixture at `path`, read from its
+    * footer so the streaming source (which requires an explicit
     * schema) adapts to whichever `ts` encoding the fixture shipped —
     * legacy TIMESTAMP(NANOS)-as-long or native TIMESTAMP(MICROS). See
     * [[graft.sources.Tables.normalizeEventTs]]. */
   def probeSchema(s: SparkSession, path: String): StructType = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    s.read.parquet(path).schema
+    graft.sources.Parquet.read(s, path).schema
   }
 
   /** File-source stream over a directory of event parquet parts (one

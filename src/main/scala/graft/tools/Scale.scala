@@ -10,7 +10,7 @@ import graft.ingest.EdgeBuilder
 import graft.operators.EventQueries
 import graft.pipeline.Admission
 import graft.query.{BipartiteExpand, CoStar, GraphAlgos}
-import graft.sources.Tables
+import graft.sources.{Parquet, Tables}
 
 /** The scale harness: each family replicates a fixture table `factor`×
   * with one shared generator per table, runs its operators on the
@@ -431,7 +431,7 @@ object Scale {
     for (factor <- factors) withWorkDir(spark, s"graft_skew_f$factor") { work =>
       events(base, factor, Some(hubMod)).write.mode("overwrite")
         .parquet(s"$work/events")
-      val ev = spark.read.parquet(s"$work/events")
+      val ev = Parquet.read(spark, s"$work/events")
       val nEvents = ev.count()
       val hubShare = ev.filter(col("user_id") === 0).count().toDouble / nEvents
 
@@ -475,7 +475,7 @@ object Scale {
       val dim = ev.select("user_id").distinct()
         .withColumn("grp", pmod(col("user_id"), lit(5)))
       dim.write.mode("overwrite").parquet(s"$work/dim")
-      val dimT = spark.read.parquet(s"$work/dim")
+      val dimT = Parquet.read(spark, s"$work/dim")
       val bcConf = "spark.sql.autoBroadcastJoinThreshold"
       val skewConf = "spark.sql.adaptive.skewJoin.enabled"
       val saved = Seq(bcConf, skewConf).map(k => k -> spark.conf.getOption(k))
@@ -547,7 +547,7 @@ object Scale {
         documents(base, factor).write.mode("overwrite").parquet(p)
         p
       }
-      val docs = spark.read.parquet(corpusPath)
+      val docs = Parquet.read(spark, corpusPath)
       val nDocs = docs.count()
 
       // ---- near-dup pairs (PPJoin prefix filter, gate parameters)
@@ -766,7 +766,7 @@ object Scale {
       val (h1, h2) = warm.splitAt(warm.length / 2)
       val plateau = h1.nonEmpty && h2.nonEmpty &&
         h2.max <= math.max(1.5 * h1.max, h1.max + (64 << 10))
-      val hits = spark.read.parquet(outDir)
+      val hits = Parquet.read(spark, outDir)
         .select("event_type", "hourUs", "cnt", "side").collect()
         .map(r => ((r.getString(0), r.getLong(1), r.getString(3)),
           r.getLong(2))).toMap
@@ -796,8 +796,8 @@ object Scale {
     * on these fixtures. Reads the raw parquet, not [[Tables]]. */
   def fixture(spark: SparkSession, src: String, outRoot: String,
       factors: Seq[Int], emit: Line => Unit): Unit = {
-    val docs = spark.read.parquet(s"$src/documents.parquet")
-    val emb = spark.read.parquet(s"$src/embeddings.parquet")
+    val docs = Parquet.read(spark, s"$src/documents.parquet")
+    val emb = Parquet.read(spark, s"$src/embeddings.parquet")
     for (factor <- factors) {
       val out = s"$outRoot/f$factor"
       documents(docs, factor).coalesce(1)

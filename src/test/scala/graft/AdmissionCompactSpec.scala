@@ -173,6 +173,39 @@ class AdmissionCompactSpec extends SparkSpec {
     assert(got3 == Seq(4L), s"dup of the replayed increment must be rejected: $got3")
   }
 
+  test("corpus skips an increment a crashed admit left uncommitted") {
+    import spark.implicits._
+    val root = freshRoot()
+    Admission.admit(Seq((1L, "aa bb cc dd ee ff gg", "s"))
+      .toDF("doc_id", "text", "source"), root, "d1")
+    // admit(d2) crashed inside its corpus write: the committer created
+    // corpus/inc=d2 and its _temporary dir at job setup, but the job
+    // never committed, so there is no data file and no _SUCCESS marker
+    assert(new java.io.File(s"$root/corpus/inc=d2/_temporary/0").mkdirs())
+    assert(ids(Admission.corpus(spark, root)) == Seq(1L))
+    // the replay commits the dir and the corpus serves it
+    Admission.admit(Seq((2L, "hh ii jj kk ll mm nn", "s"))
+      .toDF("doc_id", "text", "source"), root, "d2")
+    assert(ids(Admission.corpus(spark, root)) == Seq(1L, 2L))
+  }
+
+  test("index keeps zero-padded increment ids before and after compact") {
+    import spark.implicits._
+    val root = freshRoot()
+    Admission.admit(Seq((1L, "aa bb cc dd ee ff gg", "s"))
+      .toDF("doc_id", "text", "source"), root, "0003")
+    Admission.admit(Seq((2L, "hh ii jj kk ll mm nn", "s"))
+      .toDF("doc_id", "text", "source"), root, "0010")
+    def incs(): Seq[String] = {
+      val idx = Admission.index(spark, root)
+      assert(idx.schema("inc").dataType == org.apache.spark.sql.types.StringType)
+      idx.select("inc").distinct().collect().map(_.getString(0)).sorted.toSeq
+    }
+    assert(incs() == Seq("0003", "0010"), "unfolded increment dirs")
+    assert(Admission.compact(spark, root))
+    assert(incs() == Seq("0003", "0010"), "folded segment")
+  }
+
   test("a fresh session catalog re-registers the base from the manifest") {
     import spark.implicits._
     val root = freshRoot()

@@ -1,7 +1,12 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.types._
-import graft.sources.Tables
+import graft.pipeline.Admission
+import graft.sources.{Parquet, Tables}
 
 /** Fixture-schema contract: every `Tables.*` loader must hand
   * downstream operators the SAME logical schema regardless of how the
@@ -105,5 +110,87 @@ class TablesContractSpec extends SparkSpec {
       .probeSchema(spark, s"$dir/events.parquet")
     assert(probed.map(_.name) == Seq("event_id", "ts", "user_id",
       "event_type", "value", "props"))
+  }
+
+  // ---- footer schemas: Parquet.read must hand out exactly the schema
+  // Spark's own inference finds, without the inference job
+
+  private def withConf[A](key: String, value: String)(body: => A): A = {
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  private def assertFooterSchema(path: String): Unit = {
+    val inferred = spark.read.parquet(path).schema
+    val footer = Parquet.read(spark, path).schema
+    assert(footer == inferred, s"$path: footer $footer, inferred $inferred")
+  }
+
+  for (name <- Tables.names)
+    test(s"$name: footer schema equals the inferred schema at every tier, " +
+        "nanosAsLong off and on") {
+      for (sf <- Seq("sf0.001", "sf0.01", "sf0.1");
+           nanos <- Seq("false", "true"))
+        withConf("spark.sql.legacy.parquet.nanosAsLong", nanos) {
+          assertFooterSchema(s"/root/testdata/$sf/$name.parquet")
+        }
+    }
+
+  /** Spark-written admission state: increment d1 folded into segment
+    * s1, increment d2 still in its `inc=d2` dirs. */
+  private lazy val admissionRoot: String = {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft_footer")
+      .toString + "/state"
+    Admission.admit(Seq((1L, "aa bb cc dd ee ff gg", "s"))
+      .toDF("doc_id", "text", "source"), root, "d1")
+    Admission.compact(spark, root)
+    Admission.admit(Seq((2L, "hh ii jj kk ll mm nn", "s"))
+      .toDF("doc_id", "text", "source"), root, "d2")
+    root
+  }
+
+  test("footer schema equals the inferred schema on Spark-written admission " +
+      "state: corpus dirs and a bucketed segment") {
+    // one increment dir, the partitioned corpus root (inc inferred from
+    // the paths), the corpus segment and the bucketed index segment
+    for (p <- Seq("corpus/inc=d2", "corpus", "corpus_base/s1", "index_base/s1"))
+      assertFooterSchema(s"$admissionRoot/$p")
+  }
+
+  /** Spark jobs started by `body` on this thread, counted by a listener.
+    * A fence job run afterwards under its own group is seen after every
+    * job of `body`, since the listener bus delivers events in order. */
+  private def jobsStarted(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"footer-jobs-${System.nanoTime()}"
+    val fence = s"$group-fence"
+    val started = new AtomicInteger()
+    val fenced = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group` => started.incrementAndGet(); ()
+          case `fence` => fenced.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "schema job count", interruptOnCancel = false)
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(fence, "listener fence", interruptOnCancel = false)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(fenced.await(30, TimeUnit.SECONDS), "fence job never seen")
+      started.get()
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a table scan's schema and a corpus frame start no Spark job") {
+    assert(jobsStarted { Tables.load(spark, dir, "orders").schema; () } == 0)
+    val root = admissionRoot // built outside the counted region
+    // one segment plus one increment dir: two frames, no job for either
+    assert(jobsStarted { Admission.corpus(spark, root).schema; () } == 0)
   }
 }
