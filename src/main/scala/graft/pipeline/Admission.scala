@@ -1156,18 +1156,20 @@ object Admission {
 
   /** The stored seen-signature index (idCol, band, sig, inc) —
     * compacted segments plus the not-yet-folded increments. The
-    * increment dirs are read with the explicit schema, `inc` a string
-    * as in the segments, so an id like `0003` keeps its leading zeros
-    * (partition-value inference would turn it into the integer 3). */
-  def index(s: SparkSession, root: String, idCol: String = "doc_id"): DataFrame = {
+    * increment dirs are read with their footer schema plus `inc` as a
+    * string, as in the segments, so an id like `0003` keeps its
+    * leading zeros (partition-value inference would turn it into the
+    * integer 3). */
+  def index(s: SparkSession, root: String): DataFrame = {
     val st = readManifest(s, root)
-    val withInc = StructType(indexSchema(idCol).fields :+ StructField("inc", StringType))
     val segs = st.segments
       .filter(seg => segHasKind(s, root, "index", seg))
       .map(seg => segTable(s, root, "index", st, seg))
     val dirs = listIncs(s, root, "index")
       .filterNot(coveredIncs(s, root, "index", st))
       .map(id => s"$root/index/inc=$id")
+    val withInc = Parquet.footerSchema(s, dirs: _*)
+      .getOrElse(indexSchema(st.idCol)).add("inc", StringType)
     val incs =
       if (dirs.isEmpty) Nil
       else Seq(s.read.option("basePath", s"$root/index").schema(withInc)

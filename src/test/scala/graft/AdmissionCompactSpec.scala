@@ -189,21 +189,23 @@ class AdmissionCompactSpec extends SparkSpec {
     assert(ids(Admission.corpus(spark, root)) == Seq(1L, 2L))
   }
 
-  test("index keeps zero-padded increment ids before and after compact") {
+  test("index keeps zero-padded increment ids and the root's id column, before and after compact") {
     import spark.implicits._
     val root = freshRoot()
     Admission.admit(Seq((1L, "aa bb cc dd ee ff gg", "s"))
-      .toDF("doc_id", "text", "source"), root, "0003")
+      .toDF("uid", "text", "source"), root, "0003", idCol = "uid")
     Admission.admit(Seq((2L, "hh ii jj kk ll mm nn", "s"))
-      .toDF("doc_id", "text", "source"), root, "0010")
-    def incs(): Seq[String] = {
+      .toDF("uid", "text", "source"), root, "0010", idCol = "uid")
+    def rows(): Seq[(Long, String)] = {
       val idx = Admission.index(spark, root)
       assert(idx.schema("inc").dataType == org.apache.spark.sql.types.StringType)
-      idx.select("inc").distinct().collect().map(_.getString(0)).sorted.toSeq
+      idx.select("uid", "inc").distinct().collect()
+        .map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
     }
-    assert(incs() == Seq("0003", "0010"), "unfolded increment dirs")
-    assert(Admission.compact(spark, root))
-    assert(incs() == Seq("0003", "0010"), "folded segment")
+    val want = Seq((1L, "0003"), (2L, "0010"))
+    assert(rows() == want, "unfolded increment dirs")
+    assert(Admission.compact(spark, root, idCol = "uid"))
+    assert(rows() == want, "folded segment")
   }
 
   test("a fresh session catalog re-registers the base from the manifest") {
