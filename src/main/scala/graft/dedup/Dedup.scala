@@ -1,7 +1,6 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
 
@@ -12,8 +11,9 @@ import graft.functions.TextFunctions
   *
   * Strategy layering, cheapest first:
   *  1. [[exact]] — one hash-groupBy over content digests;
-  *  2. [[lshCandidates]] — MinHash+LSH banding: only 32-char digests
-  *     shuffle, candidate recall tunable via (k, rowsPerBand);
+  *  2. [[lshCandidates]] — MinHash+LSH banding: signatures are built
+  *     row-locally, only 32-char band digests shuffle (into the bucket
+  *     join), candidate recall tunable via (k, rowsPerBand);
   *  3. [[nearDupPairs]] — exact shingle-Jaccard verification, run on
   *     the full corpus here but intended to be fed LSH candidates at
   *     scale (verify-what-you-bucket, never all-pairs).
@@ -35,24 +35,19 @@ object Dedup {
 
   /** MinHash+LSH candidate duplicate pairs (id_a < id_b). */
   def lshCandidates(df: DataFrame, idCol: String, textCol: String,
-      shingleN: Int = 3, k: Int = 8, rowsPerBand: Int = 2): DataFrame = {
-    val sh = TextFunctions.shingles(df, idCol, textCol, shingleN)
-    val bands = TextFunctions.lshBands(
-      TextFunctions.minhashRows(sh, idCol, k), idCol, rowsPerBand)
-    TextFunctions.lshCandidatePairs(bands, idCol)
-  }
+      shingleN: Int = 3, k: Int = 8, rowsPerBand: Int = 2): DataFrame =
+    TextFunctions.lshCandidatePairs(
+      lshIndex(df, idCol, textCol, shingleN, k, rowsPerBand), idCol)
 
   /** The corpus's LSH band-signature table — the PERSISTED index an
     * incremental pipeline stores (snapshot/bucket it on (band, sig))
     * so later increments never re-read corpus text. One row per
     * (idCol, band) with the 32-char band digest; append an
-    * increment's own index rows after admitting it. */
+    * increment's own index rows after admitting it. Row-local
+    * ([[TextFunctions.lshBands]]): building it plans no exchange. */
   def lshIndex(df: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, k: Int = 8, rowsPerBand: Int = 2): DataFrame =
-    TextFunctions.lshBands(
-      TextFunctions.minhashRows(
-        TextFunctions.shingles(df, idCol, textCol, shingleN), idCol, k),
-      idCol, rowsPerBand)
+    TextFunctions.lshBands(df, idCol, textCol, shingleN, k, rowsPerBand)
 
   /** Incremental near-dup: candidate pairs between a NEW increment and
     * an EXISTING corpus represented ONLY by its stored [[lshIndex]]
@@ -223,47 +218,6 @@ object Dedup {
       .select(col("id_a"), col("id_b"), col("cos_sim"))
       .distinct()
     (survivors, () => { bk.unpersist(); () })
-  }
-
-  /** §2.9 typed-aggregate surface (the reference's never-used
-    * mapreduce.erl skeleton, done properly): a MinHash signature as an
-    * `Aggregator[IN, BUF, OUT]` — one pass, mergeable partial buffers,
-    * usable as a typed column or registered as a UDAF via
-    * `functions.udaf`. IN = pre-hashed shingle, BUF = running minima.
-    */
-  class MinHashSigAgg(val k: Int) extends Aggregator[Long, Array[Long], Seq[Long]] {
-    override def zero: Array[Long] = Array.fill(k)(Long.MaxValue)
-    override def reduce(buf: Array[Long], shingleHash: Long): Array[Long] = {
-      var i = 0
-      while (i < k) {
-        // k cheap derived permutations of the input hash
-        val h = shingleHash * (2L * i + 1) + i
-        if (h < buf(i)) buf(i) = h
-        i += 1
-      }
-      buf
-    }
-    override def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
-      var i = 0
-      while (i < k) { if (b(i) < a(i)) a(i) = b(i); i += 1 }
-      a
-    }
-    override def finish(buf: Array[Long]): Seq[Long] = buf.toSeq
-    override def bufferEncoder: Encoder[Array[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()
-    override def outputEncoder: Encoder[Seq[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()
-  }
-
-  /** Per-document MinHash signatures through the typed Aggregator path
-    * (registered as a UDAF): (idCol, sig array<long>[k]). */
-  def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
-      shingleN: Int = 3, k: Int = 8): DataFrame = {
-    val agg = udaf(new MinHashSigAgg(k), Encoders.scalaLong)
-    TextFunctions.shingles(df, idCol, textCol, shingleN)
-      .select(col(idCol), xxhash64(col("shingle")).as("sh"))
-      .groupBy(idCol)
-      .agg(agg(col("sh")).as("sig"))
   }
 
   /** Bloom-prefiltered admission against a reference digest set —

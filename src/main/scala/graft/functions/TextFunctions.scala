@@ -5,8 +5,10 @@ import org.apache.spark.sql.functions._
 
 /** Reusable text primitives shared by the query catalog
   * ([[graft.operators.TextQueries]]) and the corpus-level dedup API
-  * ([[graft.dedup.Dedup]]). All codegen'd `functions._` compositions —
-  * no UDFs — so they inline into whole-stage codegen wherever used.
+  * ([[graft.dedup.Dedup]]), built from `functions._` compositions — no
+  * UDFs. MinHash-LSH has one implementation here ([[minhashRows]],
+  * [[lshBands]]), used by batch dedup, admission and the streaming
+  * near-dup detector alike.
   */
 object TextFunctions {
 
@@ -43,22 +45,56 @@ object TextFunctions {
       .filter(size(col("w")) >= n)
       .select(col(idCol), explode(shingleArray(col("w"), n)).as("shingle"))
 
-  /** MinHash rows: (idCol, k, mh) — K permutations simulated as keyed
-    * md5, min-reduced per document with map-side partial aggregation.
-    * Only 32-char digests ever shuffle, never raw text. */
-  def minhashRows(sh: DataFrame, idCol: String, k: Int): DataFrame =
-    sh.select(col(idCol), col("shingle"),
-        explode(sequence(lit(0), lit(k - 1))).as("k"))
-      .groupBy(idCol, "k")
-      .agg(min(md5(concat(col("k").cast("string"), lit("|"), col("shingle")))).as("mh"))
+  /** Row-local MinHash, stage 1: (idCol, graft_sh), each row's distinct
+    * word `shingleN`-gram shingle array, NULL under `shingleN` words or
+    * for NULL text.
+    *
+    * Plan shape, which decides the cost: every stage is its own
+    * projection that references its input more than once, so Catalyst
+    * keeps that input a column instead of inlining it into the k
+    * lambdas, and no generator explodes a bare column, so Spark infers
+    * no `size(...) > 0` filter (it would be pushed below these
+    * projections with the whole chain inlined, re-tokenizing per
+    * shingle). A row is tokenized and shingled once (`MinHashSpec`). */
+  private def shingleSets(df: DataFrame, idCol: String, textCol: String,
+      shingleN: Int): DataFrame = {
+    val w = col("graft_w")
+    df.select(col(idCol), words(col(textCol)).as("graft_w"))
+      .select(col(idCol),
+        when(size(w) >= shingleN, shingleArray(w, shingleN)).as("graft_sh"))
+  }
 
-  /** LSH band signatures: (idCol, band, sig) from minhash rows. */
-  def lshBands(mh: DataFrame, idCol: String, rowsPerBand: Int): DataFrame =
-    mh.withColumn("band", floor(col("k") / rowsPerBand).cast("int"))
-      .groupBy(idCol, "band")
-      .agg(md5(array_join(
-        transform(array_sort(collect_list(struct(col("k"), col("mh")))),
-          x => x.getField("mh")), "|")).as("sig"))
+  /** Stage 2: the k keyed-md5 minima of a shingle-array column, element
+    * j = the least md5("j|s") over its shingles s (k permutations
+    * simulated as keyed md5); NULL for a NULL array. */
+  private def minima(sh: Column, k: Int): Column =
+    when(sh.isNotNull, array((0 until k).map(j =>
+      array_min(transform(sh, s => md5(concat(lit(s"$j|"), s))))): _*))
+
+  /** MinHash rows: (idCol, k INT, mh) — one row per (row, permutation),
+    * exploded from the row's minima with no shuffle. Each row is signed
+    * on its own: two rows sharing an id give two signatures, and rows
+    * with fewer than `shingleN` words give none. */
+  def minhashRows(df: DataFrame, idCol: String, textCol: String,
+      shingleN: Int = 3, k: Int = 8): DataFrame =
+    shingleSets(df, idCol, textCol, shingleN)
+      .select(col(idCol), posexplode(minima(col("graft_sh"), k)).as(Seq("k", "mh")))
+
+  /** LSH band signatures: (idCol, band INT, sig) — band b covers
+    * permutations [b·rowsPerBand, (b+1)·rowsPerBand) ∩ [0, k), and its
+    * sig is the md5 of those minima joined by "|". Row-local like
+    * [[minhashRows]]: no shuffle, so the index a pipeline persists is
+    * built in the scan stage. */
+  def lshBands(df: DataFrame, idCol: String, textCol: String,
+      shingleN: Int = 3, k: Int = 8, rowsPerBand: Int = 2): DataFrame = {
+    val mh = col("graft_mh")
+    val sigs = (0 until k by rowsPerBand).map(lo => md5(concat_ws("|",
+      (lo until math.min(k, lo + rowsPerBand)).map(j => element_at(mh, j + 1)): _*)))
+    shingleSets(df, idCol, textCol, shingleN)
+      .select(col(idCol), minima(col("graft_sh"), k).as("graft_mh"))
+      .select(col(idCol),
+        posexplode(when(mh.isNotNull, array(sigs: _*))).as(Seq("band", "sig")))
+  }
 
   /** Candidate pairs sharing any LSH band bucket: (id_a, id_b). */
   def lshCandidatePairs(bands: DataFrame, idCol: String): DataFrame = {

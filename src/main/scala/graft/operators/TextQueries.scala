@@ -228,10 +228,12 @@ object TextQueries {
       .orderBy("doc_a", "doc_b")
 
   /** MinHash signatures (K=8 permutations simulated as keyed md5):
-    * one row per (doc_id, k) with the min digest — the partial-agg
-    * shape Spark turns into map-side combine. */
+    * one row per (doc_id, k) with the min digest, computed row-locally
+    * from each document's own shingle array (no shuffle before the
+    * sort). */
   private def minhashSig(s: SparkSession, d: String): DataFrame =
-    graft.functions.TextFunctions.minhashRows(shingles(s, d), "doc_id", k = 8)
+    graft.functions.TextFunctions
+      .minhashRows(Tables.documents(s, d), "doc_id", "text", k = 8)
       .orderBy("doc_id", "k")
 
   /** Shared verified-pair graph + transitive closure — the oracle
@@ -260,13 +262,14 @@ object TextQueries {
   /** LSH banding over the minhash signature (4 bands × 2 rows):
     * candidate pairs = documents sharing any band signature. Only the
     * 32-char band digest is shuffled — the 100 TB-safe join key. */
-  private def lshPairs(s: SparkSession, d: String): DataFrame = {
-    val mh = graft.functions.TextFunctions.minhashRows(shingles(s, d), "doc_id", k = 8)
-    val bands = graft.functions.TextFunctions.lshBands(mh, "doc_id", rowsPerBand = 2)
-    graft.functions.TextFunctions.lshCandidatePairs(bands, "doc_id")
+  private def lshPairs(s: SparkSession, d: String): DataFrame =
+    lshCandidates(s, d).orderBy("doc_a", "doc_b")
+
+  /** [[graft.dedup.Dedup.lshCandidates]] (3-word shingles, 4 bands × 2
+    * rows) as (doc_a, doc_b). */
+  private def lshCandidates(s: SparkSession, d: String): DataFrame =
+    graft.dedup.Dedup.lshCandidates(Tables.documents(s, d), "doc_id", "text")
       .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
-      .orderBy("doc_a", "doc_b")
-  }
 
   /** Incremental near-dup — the daily-crawl shape: the corpus is
     * represented ONLY by its stored band-signature index
@@ -413,11 +416,8 @@ object TextQueries {
     * sets are never revisited. */
   private def minhashEstimate(s: SparkSession, d: String): DataFrame = {
     val mh = graft.functions.TextFunctions
-      .minhashRows(shingles(s, d), "doc_id", k = 8)
-    val bands = graft.functions.TextFunctions.lshBands(mh, "doc_id", rowsPerBand = 2)
-    val cands = graft.functions.TextFunctions.lshCandidatePairs(bands, "doc_id")
-      .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
-    cands
+      .minhashRows(Tables.documents(s, d), "doc_id", "text", k = 8)
+    lshCandidates(s, d)
       .join(mh.select(col("doc_id").as("doc_a"), col("k"), col("mh").as("mh_a")),
         "doc_a")
       .join(mh.select(col("doc_id").as("doc_b"), col("k"), col("mh").as("mh_b")),
@@ -498,10 +498,7 @@ object TextQueries {
     * classic DP `levenshtein`, so the distances are integer-exact. */
   private def editDistance(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
-    val mh = graft.functions.TextFunctions.minhashRows(shingles(s, d), "doc_id", k = 8)
-    val bands = graft.functions.TextFunctions.lshBands(mh, "doc_id", rowsPerBand = 2)
-    graft.functions.TextFunctions.lshCandidatePairs(bands, "doc_id")
-      .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
+    lshCandidates(s, d)
       .join(docs.select(col("doc_id").as("doc_a"), col("text").as("ta")), "doc_a")
       .join(docs.select(col("doc_id").as("doc_b"), col("text").as("tb")), "doc_b")
       .select(col("doc_a"), col("doc_b"),

@@ -143,8 +143,12 @@ object Admission {
           }))
         try work.foreach(_ => done.take().get())
         catch { case e: java.util.concurrent.ExecutionException =>
-          sc.cancelJobsWithTag(tag)
-          futs.foreach(f => scala.util.Try(f.get()))
+          // a cancel reaches only jobs already submitted: repeat it until
+          // every sibling has ended, so a job started late is cancelled too
+          while (!futs.forall(_.isDone)) {
+            sc.cancelJobsWithTag(tag)
+            Thread.sleep(20)
+          }
           throw e.getCause
         }
         futs.map(_.get())

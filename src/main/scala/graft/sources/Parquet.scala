@@ -42,20 +42,26 @@ object Parquet {
 
   /** Data schema of the first visible data file under `paths` (glob,
     * file or directory, searched recursively), if there is one. */
-  def footerSchema(s: SparkSession, paths: String*): Option[StructType] = {
+  def footerSchema(s: SparkSession, paths: String*): Option[StructType] =
+    footer(s, paths: _*).map(sparkSchema(s, _))
+
+  /** Footer (row groups skipped) of the first visible data file under
+    * `paths`, if there is one. */
+  def footer(s: SparkSession, paths: String*): Option[Footer] = {
     val conf = s.sessionState.newHadoopConf()
     val first = paths.flatMap { p =>
       val path = new Path(p)
       val fs = path.getFileSystem(conf)
       Option(fs.globStatus(path)).toSeq.flatten.flatMap(leafFiles(fs, _))
     }.minByOption(_.getPath.toString)
-    first.map { f =>
-      val meta = ParquetFooterReader.readFooter(
-        HadoopInputFile.fromStatus(f, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
-      ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, meta),
-        new ParquetToSparkSchemaConverter(s.sessionState.conf))
-    }
+    first.map(f => new Footer(f.getPath, ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(f, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)))
   }
+
+  /** The Spark schema of `footer` under the session's SQL conf. */
+  def sparkSchema(s: SparkSession, footer: Footer): StructType =
+    ParquetFileFormat.readSchemaFromFooter(footer,
+      new ParquetToSparkSchemaConverter(s.sessionState.conf))
 
   /** Spark's file-index rule: `_`/`.`-prefixed names (`_SUCCESS`,
     * `_temporary`, `.crc` files) are not data, `k=v` dirs are. */

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated synthetic parquet tables
   * (`TESTDATA.md`): TPC-H-ish star schema + events/documents/embeddings.
@@ -90,9 +91,32 @@ object Tables {
     * micros are identical either way).
     */
   def events(s: SparkSession, d: String): DataFrame = {
-    // Harmless for MICROS files; required to read legacy NANOS at all.
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    normalizeEventTs(load(s, d, "events"))
+    val path = s"$d/events.parquet"
+    normalizeEventTs(s.read.schema(eventsSchema(s, path)).parquet(path))
+  }
+
+  /** Physical schema of the events parquet at `path` (a file or a
+    * directory of parts), read from its footer. Spark reads a
+    * TIMESTAMP(NANOS) `ts` only as a raw long under
+    * `spark.sql.legacy.parquet.nanosAsLong`, so that conf is set on the
+    * session when — and only when — the footer's `ts` is NANOS; a
+    * MICROS fixture leaves the caller's session untouched. The one
+    * place [[events]] and the streaming readers decide it. */
+  def eventsSchema(s: SparkSession, path: String): StructType = {
+    import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit,
+      TimestampLogicalTypeAnnotation}
+    Parquet.footer(s, path) match {
+      case None => Parquet.read(s, path).schema // Spark raises its own error
+      case Some(f) =>
+        val file = f.getParquetMetadata.getFileMetaData.getSchema
+        val nanos = file.containsField("ts") &&
+          (file.getType(file.getFieldIndex("ts")).getLogicalTypeAnnotation match {
+            case t: TimestampLogicalTypeAnnotation => t.getUnit == TimeUnit.NANOS
+            case _ => false
+          })
+        if (nanos) s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        Parquet.sparkSchema(s, f)
+    }
   }
 
   /** Normalize whatever `ts` encoding the fixture shipped to a plain
@@ -125,8 +149,4 @@ object Tables {
     fanout(s, d, "documents", "doc_id")
   def embeddings(s: SparkSession, d: String): DataFrame =
     fanout(s, d, "embeddings", "vec_id")
-
-  /** Register every table as a temp view (for spark.sql entry points). */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    names.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
 }

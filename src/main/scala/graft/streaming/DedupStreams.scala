@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.functions.TextFunctions
@@ -13,51 +13,25 @@ import graft.functions.TextFunctions
   * CANDIDATE. The exact-Jaccard verify stage stays a batch job over
   * the flagged pairs — the same band → verify staging as batch.
   *
-  * The signature computation is deliberately ROW-LOCAL: the batch
-  * pipeline's `minhashRows` takes a min per (doc, k) over exploded
-  * shingle rows (a wide aggregation — not streamable without a
-  * watermark), but that min is equally `array_min` over the
-  * document's own shingle array, digest-for-digest identical
-  * (`DedupStreamSpec` pins it). So the only stateful operator in the
-  * stream is the band-key `flatMapGroupsWithState`, whose state is
-  * one (band signature → min doc id) entry per DISTINCT band — it
-  * grows with corpus novelty, not stream length, and is the same key
-  * set a batch LSH index materializes.
+  * The band signatures are the batch pipeline's own
+  * ([[graft.functions.TextFunctions.lshBands]]), which is row-local —
+  * each permutation minimum is an `array_min` over the document's own
+  * shingle array, with no aggregation to watermark. So the only
+  * stateful operator in the stream is the band-key
+  * `flatMapGroupsWithState`, whose state is one (band signature → min
+  * doc id) entry per DISTINCT band — it grows with corpus novelty, not
+  * stream length, and is the same key set a batch LSH index
+  * materializes.
   */
 object DedupStreams {
 
+  /** One (document, band) observation; `band_key` is "band:sig". */
   final case class BandObs(band_key: String, doc_id: Long)
   /** Smallest doc id ever seen for a band key. */
   final case class BandState(minId: Long)
   /** `dup_of` = the smaller colliding doc id, or -1 when this doc is
     * the band's first/smallest occupant. */
   final case class BandVerdict(doc_id: Long, band_key: String, dup_of: Long)
-
-  /** Row-local LSH band signatures: (idCol, band_key) — one row per
-    * (document, band). Digest-identical to the batch
-    * `minhashRows` + `lshBands` composition (k permutations as keyed
-    * md5, min per permutation, per-band md5 over the band's
-    * permutation minima joined with "|"). Documents with fewer than
-    * `shingleN` words produce no shingles and therefore no bands —
-    * same as the batch pipeline. */
-  def bandRows(docs: DataFrame, idCol: String, textCol: String,
-      shingleN: Int = 3, k: Int = 8, rowsPerBand: Int = 2): DataFrame = {
-    val w = TextFunctions.words(col(textCol))
-    val shing = TextFunctions.shingleArray(w, shingleN)
-    def mh(j: Int): Column =
-      array_min(transform(shing,
-        s => md5(concat(lit(j.toString), lit("|"), s))))
-    val nBands = k / rowsPerBand
-    val bands = (0 until nBands).map { b =>
-      val sig = md5(concat_ws("|",
-        (0 until rowsPerBand).map(r => mh(b * rowsPerBand + r)): _*))
-      concat(lit(s"$b:"), sig)
-    }
-    docs
-      .filter(size(w) >= shingleN)
-      .select(col(idCol).cast("long").as("doc_id"),
-        explode(array(bands: _*)).as("band_key"))
-  }
 
   /** The stateful stage: per band key, emit one verdict per arriving
     * document — `dup_of` is the smallest colliding id when one exists
@@ -110,15 +84,18 @@ object DedupStreams {
       }
   }
 
-  /** Full streaming pipeline over a document stream: banded rows →
-    * keyed verdicts. A document is a near-dup candidate iff ANY of
-    * its bands reports `dup_of >= 0`; that per-document reduction is
-    * the consumer's (or a downstream batch job's) one-line group-by
-    * over the sink. */
+  /** Full streaming pipeline over a document stream: band rows
+    * (none for documents under 3 words) → keyed verdicts. A document
+    * is a near-dup candidate iff ANY of its bands reports
+    * `dup_of >= 0`; that per-document reduction is the consumer's (or
+    * a downstream batch job's) one-line group-by over the sink. */
   def nearDupVerdicts(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text",
       stateTtl: Option[java.time.Duration] = None): Dataset[BandVerdict] = {
     import docs.sparkSession.implicits._
-    bandVerdicts(bandRows(docs, idCol, textCol).as[BandObs], stateTtl)
+    val bands = TextFunctions.lshBands(docs, idCol, textCol)
+      .select(concat_ws(":", col("band"), col("sig")).as("band_key"),
+        col(idCol).cast("long").as("doc_id"))
+    bandVerdicts(bands.as[BandObs], stateTtl)
   }
 }

@@ -22,11 +22,10 @@ object EventStreams {
     * footer so the streaming source (which requires an explicit
     * schema) adapts to whichever `ts` encoding the fixture shipped —
     * legacy TIMESTAMP(NANOS)-as-long or native TIMESTAMP(MICROS). See
+    * [[graft.sources.Tables.eventsSchema]] and
     * [[graft.sources.Tables.normalizeEventTs]]. */
-  def probeSchema(s: SparkSession, path: String): StructType = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    graft.sources.Parquet.read(s, path).schema
-  }
+  def probeSchema(s: SparkSession, path: String): StructType =
+    graft.sources.Tables.eventsSchema(s, path)
 
   /** File-source stream over a directory of event parquet parts (one
     * file per micro-batch locally; a directory listing feed at scale),

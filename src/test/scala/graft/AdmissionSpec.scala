@@ -242,4 +242,24 @@ class AdmissionSpec extends SparkSpec {
     // the success path is unchanged: results in input order
     assert(Admission.inParallel[Int](spark)(Seq(() => 1, () => 2, () => 3)) == Seq(1, 2, 3))
   }
+
+  test("inParallel: a sibling job submitted after the failure is cancelled too") {
+    val boom = new IllegalStateException("injected failure")
+    val t0 = System.nanoTime()
+    intercept[IllegalStateException] {
+      Admission.inParallel[Any](spark)(Seq(
+        () => throw boom,
+        // starts its ~60 s job well after the failure was seen
+        () => {
+          Thread.sleep(1000)
+          spark.range(0, 4, 1, 4).foreach { _ =>
+            val ctx = org.apache.spark.TaskContext.get()
+            val until = System.nanoTime() + 60L * 1000 * 1000 * 1000
+            while (!ctx.isInterrupted() && System.nanoTime() < until) Thread.sleep(20)
+          }
+        }))
+    }
+    val secs = (System.nanoTime() - t0) / 1e9
+    assert(secs < 30, f"the late sibling's Spark job was not cancelled ($secs%.1f s)")
+  }
 }

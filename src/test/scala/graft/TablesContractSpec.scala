@@ -112,6 +112,40 @@ class TablesContractSpec extends SparkSpec {
       "event_type", "value", "props"))
   }
 
+  test("events loader and stream probe leave nanosAsLong alone on a MICROS " +
+      "fixture") {
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    withConf(key, "false") {
+      Tables.events(spark, dir)
+      graft.streaming.EventStreams.probeSchema(spark, s"$dir/events.parquet")
+      assert(spark.conf.get(key) == "false", s"$key leaked into the session")
+    }
+  }
+
+  test("a TIMESTAMP(NANOS) events file turns nanosAsLong on and loads as " +
+      "truncated micros") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val d = java.nio.file.Files.createTempDirectory("graft_nanos").toString
+    val schema = MessageTypeParser.parseMessageType(
+      "message e { required int64 event_id; " +
+        "required int64 ts (TIMESTAMP(NANOS,true)); }")
+    val w = ExampleParquetWriter.builder(new Path(s"$d/events.parquet"))
+      .withType(schema).build()
+    try w.write(new SimpleGroupFactory(schema).newGroup()
+      .append("event_id", 1L).append("ts", 1700000000123456789L))
+    finally w.close()
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    withConf(key, "false") {
+      val ev = Tables.events(spark, d)
+      assert(spark.conf.get(key) == "true")
+      assert(ev.schema("ts").dataType == TimestampType)
+      assert(ev.selectExpr("unix_micros(ts)").head.getLong(0) == 1700000000123456L)
+    }
+  }
+
   // ---- footer schemas: Parquet.read must hand out exactly the schema
   // Spark's own inference finds, without the inference job
 

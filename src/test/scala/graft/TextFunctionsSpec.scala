@@ -156,9 +156,7 @@ class TextFunctionsSpec extends SparkSpec {
 
   test("minhash: signatures are permutation-count wide and stable") {
     val docs = Seq((1L, "m n o p q")).toDF("id", "text")
-    val mh = TextFunctions.minhashRows(
-      TextFunctions.shingles(docs, "id", "text"), "id", k = 4)
-      .collect()
+    val mh = TextFunctions.minhashRows(docs, "id", "text", k = 4).collect()
     assert(mh.length == 4)
     assert(mh.map(_.getInt(1)).sorted.toSeq == Seq(0, 1, 2, 3))
   }
