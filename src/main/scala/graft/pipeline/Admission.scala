@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -28,9 +28,17 @@ import graft.sources.Parquet
   *     [[compact]]): folded increments, written for index/digests as
   *     tables bucketed on their match keys, for corpus as plain
   *     parquet (payload — never joined on a key);
-  *   - `manifest/gen-<N>` — compaction manifests; the highest
-  *     generation wins (each is written whole then renamed into
-  *     place, so a reader never observes a partial manifest).
+  *   - `manifest/gen-<N>` — compaction manifests, committed through
+  *     the [[Manifest]] protocol: the highest generation wins (each is
+  *     written whole then renamed into place, so a reader never
+  *     observes a partial manifest), and each commit deletes all but
+  *     the newest [[RetainManifests]], so a stream that compacts
+  *     forever keeps a bounded `manifest/` listing.
+  *
+  * Single writer: [[compact]] is the only writer of `manifest/` and
+  * `*_base/`, and no caller may run two `compact`s on one root at
+  * once — both would mint the same segment id and generation, and
+  * each one's garbage collection would delete the other's segments.
   *
   * Admission rule, greedy by id (documents ascend across increments —
   * a crawl log's natural order; [[AdmissionSpec]] pins the parity):
@@ -82,6 +90,7 @@ import graft.sources.Parquet
   * state that survives without replaying everything.
   */
 object Admission {
+  import Manifest.fsOf
 
   private def indexSchema(idCol: String) = StructType(Seq(
     StructField(idCol, LongType), StructField("band", IntegerType),
@@ -109,9 +118,6 @@ object Admission {
     case "vecs" => vecsSchema(idCol)
     case other => sys.error(s"no schema for state kind $other")
   }
-
-  private def fsOf(s: SparkSession, path: String): FileSystem =
-    new Path(path).getFileSystem(s.sparkContext.hadoopConfiguration)
 
   /** Run INDEPENDENT Spark actions of one admission step concurrently
     * (optimization guide §2.6 "overlap independent jobs"): the loop's
@@ -184,13 +190,8 @@ object Admission {
   // Compaction manifest
   // ---------------------------------------------------------------------
 
-  /** One live compacted segment: which increment ids it folded.
-    * `legacy` marks a segment inherited from a pre-leveled (round-10)
-    * manifest, whose data dirs live at `{kind}_base/g<id>` instead of
-    * `s<id>` — it participates in reads and merges like any other
-    * segment and disappears at the first major fold. */
-  private[graft] final case class Segment(id: Int, incs: Set[String],
-      legacy: Boolean = false)
+  /** One live compacted segment: which increment ids it folded. */
+  private[graft] final case class Segment(id: Int, incs: Set[String])
 
   /** What a manifest generation records: the live segments (and which
     * increment ids each folded), the next never-used segment id, and
@@ -205,92 +206,38 @@ object Admission {
 
   private val EmptyState = CompactionState(0, 0, "doc_id", 1, Nil)
 
-  private def manifestDir(root: String) = s"$root/manifest"
-
-  private val GenFile = "^gen-(\\d+)$".r
+  /** Manifest generations a [[compact]] keeps: the head and one behind,
+    * so a reader that listed the head just before a commit can still
+    * open it. Older ones describe segments GC already deleted. */
+  private[graft] val RetainManifests = 2
 
   /** Highest-generation manifest under `root`, or the empty state.
     * Manifests are immutable once renamed into place, so readers and
     * a concurrent [[compact]] never race on file contents — only on
     * WHICH generation is current, and any complete generation yields
     * a correct (if slightly stale) seen-state view. */
-  private[graft] def readManifest(s: SparkSession, root: String): CompactionState = {
-    val fs = fsOf(s, root)
-    val dir = new Path(manifestDir(root))
-    if (!fs.exists(dir)) return EmptyState
-    val gens = fs.listStatus(dir).map(_.getPath.getName).collect {
-      case GenFile(n) => n.toInt
+  private[graft] def readManifest(s: SparkSession, root: String): CompactionState =
+    Manifest.generations(s, root).lastOption.fold(EmptyState) { gen =>
+      val kv = Manifest.read(s, root, gen)
+      def all(k: String) = kv.filter(_.startsWith(s"$k=")).map(_.stripPrefix(s"$k="))
+      def one(k: String): String = all(k).headOption
+        .getOrElse(sys.error(s"manifest gen-$gen under $root has no '$k=' line"))
+      // the pre-leveled single-base format (`folded=` lines) has no
+      // `nextseg=`: refuse it rather than read it as an empty state
+      if (all("nextseg").isEmpty)
+        sys.error(s"manifest gen-$gen under $root is in the unsupported " +
+          "pre-leveled single-base format (no 'nextseg=' line); replay the " +
+          "root's increments into a fresh root")
+      // seginc=<segId>:<incId> — split on the FIRST colon only; the
+      // increment id is caller-supplied and may itself contain colons
+      val segIncs = all("seginc").map { body =>
+        val i = body.indexOf(':')
+        require(i > 0, s"manifest gen-$gen: bad seginc line '$body'")
+        body.take(i).toInt -> body.drop(i + 1)
+      }.groupMap(_._1)(_._2)
+      CompactionState(gen, one("buckets").toInt, one("idcol"), one("nextseg").toInt,
+        all("seg").map(_.toInt).map(id => Segment(id, segIncs.getOrElse(id, Nil).toSet)))
     }
-    if (gens.isEmpty) return EmptyState
-    val gen = gens.max
-    val in = fs.open(new Path(dir, s"gen-$gen"))
-    val text =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val kv = text.linesIterator.map(_.trim).filter(_.nonEmpty).toSeq
-    def one(k: String): String = kv.collectFirst {
-      case l if l.startsWith(s"$k=") => l.stripPrefix(s"$k=")
-    }.getOrElse(sys.error(s"manifest gen-$gen missing '$k='"))
-    // Pre-leveled (round-10) manifests have no `nextseg=`/`seg=`
-    // lines — they describe ONE base generation at `{kind}_base/g<N>`
-    // with a flat `folded=` list. Read them as a single LEGACY
-    // segment so an upgraded binary keeps serving (and eventually
-    // merges away) state written by the old code, instead of
-    // bricking a years-long root.
-    if (!kv.exists(_.startsWith("nextseg="))) {
-      val folded = kv.filter(_.startsWith("folded="))
-        .map(_.stripPrefix("folded=")).toSet
-      return CompactionState(gen, one("buckets").toInt, one("idcol"),
-        gen + 1, Seq(Segment(gen, folded, legacy = true)))
-    }
-    val legacyIds = kv.filter(_.startsWith("segstyle="))
-      .map(_.stripPrefix("segstyle=")).collect {
-        case v if v.endsWith(":g") => v.stripSuffix(":g").toInt
-      }.toSet
-    val segIds = kv.filter(_.startsWith("seg=")).map(_.stripPrefix("seg=").toInt)
-    // seginc=<segId>:<incId> — split on the FIRST colon only; the
-    // increment id is caller-supplied and may itself contain colons
-    val segIncs = kv.filter(_.startsWith("seginc=")).map { l =>
-      val body = l.stripPrefix("seginc=")
-      val i = body.indexOf(':')
-      require(i > 0, s"manifest gen-$gen: bad seginc line '$l'")
-      body.take(i).toInt -> body.drop(i + 1)
-    }.groupBy(_._1).map { case (k, v) => k -> v.map(_._2).toSet }
-    CompactionState(gen, one("buckets").toInt, one("idcol"),
-      one("nextseg").toInt,
-      segIds.map(id => Segment(id, segIncs.getOrElse(id, Set.empty),
-        legacy = legacyIds(id))))
-  }
-
-  /** Write manifest generation `st.generation` whole-then-rename: the
-    * rename is the commit point — a crash before it leaves the
-    * previous generation current and the new segment files as harmless
-    * orphans the next compaction overwrites (segment ids only advance
-    * on commit, so a replayed compact reuses — and `overwrite`s — the
-    * same ids). */
-  private def writeManifest(s: SparkSession, root: String,
-      st: CompactionState): Unit = {
-    val fs = fsOf(s, root)
-    val dir = new Path(manifestDir(root))
-    fs.mkdirs(dir)
-    val tmp = new Path(dir, s"gen-${st.generation}.tmp")
-    val out = fs.create(tmp, true)
-    try {
-      val body = (Seq(s"buckets=${st.buckets}", s"idcol=${st.idCol}",
-        s"nextseg=${st.nextSeg}") ++
-        st.segments.flatMap { seg =>
-          (s"seg=${seg.id}" +:
-            (if (seg.legacy) Seq(s"segstyle=${seg.id}:g") else Nil)) ++
-            seg.incs.toSeq.sorted.map(i => s"seginc=${seg.id}:$i")
-        })
-        .mkString("", "\n", "\n")
-      out.write(body.getBytes("UTF-8"))
-    } finally out.close()
-    val dest = new Path(dir, s"gen-${st.generation}")
-    if (fs.exists(dest)) fs.delete(dest, false) // re-run of a crashed compact
-    if (!fs.rename(tmp, dest))
-      sys.error(s"manifest commit failed: $tmp -> $dest")
-  }
 
   /** Catalog table name for one keyed segment — deterministic from
     * (root, kind, segId) so any session can re-register it. The root
@@ -305,25 +252,24 @@ object Admission {
       root.toLowerCase.replaceAll("[^a-z0-9]+", "_").dropWhile(_ == '_')
   }
 
-  /** Write-side path of a NEW segment (always `s<id>`). */
-  /** The catalog name the round-10 code registered for generation
-    * `gen` (g-prefixed, no root hash) — dropped alongside the current
-    * name when a legacy segment dies, so a persistent metastore is
-    * not left with entries pointing at deleted directories. */
-  private def legacyTableName(root: String, kind: String, gen: Int): String =
-    s"graft_adm_${kind}_g${gen}_" +
-      root.toLowerCase.replaceAll("[^a-z0-9]+", "_").dropWhile(_ == '_')
-
   private def dropTableIfExists(s: SparkSession, name: String): Unit =
     if (s.catalog.tableExists(name)) { s.sql(s"DROP TABLE $name"); () }
 
   private def basePath(root: String, kind: String, seg: Int): String =
     s"$root/${kind}_base/s$seg"
 
-  /** Read-side path of a LIVE segment — legacy (round-10) segments
-    * live at `g<id>`. */
-  private def segDataPath(root: String, kind: String, seg: Segment): String =
-    s"$root/${kind}_base/${if (seg.legacy) "g" else "s"}${seg.id}"
+  private val SegDir = "^s(\\d+)$".r
+
+  /** Ids of the segment dirs on disk under `{kind}_base/` — live, dead
+    * or orphaned by a killed compact. */
+  private def segDirIds(s: SparkSession, root: String, kind: String): Seq[Int] = {
+    val fs = fsOf(s, root)
+    val dir = new Path(s"$root/${kind}_base")
+    if (!fs.exists(dir)) Nil
+    else fs.listStatus(dir).toSeq.map(_.getPath.getName).collect {
+      case SegDir(id) => id.toInt
+    }
+  }
 
   /** Bucket/sort keys per keyed state kind — the equi-join keys of the
     * admission cross-matches, so a scan of a segment satisfies the
@@ -357,7 +303,7 @@ object Admission {
       val keys = keysOf(kind, st.idCol).map(k => s"`$k`").mkString(", ")
       s.sql(s"CREATE TABLE $name (${ddlOf(kind, st.idCol)}) USING PARQUET " +
         s"CLUSTERED BY ($keys) SORTED BY ($keys) INTO ${st.buckets} BUCKETS " +
-        s"LOCATION '${segDataPath(root, kind, seg)}'")
+        s"LOCATION '${basePath(root, kind, seg.id)}'")
     }
     s.table(name)
   }
@@ -367,18 +313,7 @@ object Admission {
     * are simply absent from segments folded before they existed. */
   private def segHasKind(s: SparkSession, root: String, kind: String,
       seg: Segment): Boolean =
-    fsOf(s, root).exists(new Path(segDataPath(root, kind, seg)))
-
-  /** Increment ids whose `kind` data is HELD BY a live segment — the
-    * per-kind exclusion set for the `inc=*` readers. Usually equal to
-    * `st.folded`, but a LEGACY (round-10) segment never folded the
-    * corpus payload, so a folded increment's corpus can still live
-    * only in its `inc=` dir: readers must keep serving it and
-    * [[compact]]/GC must treat it as still-unfolded for that kind. */
-  private def coveredIncs(s: SparkSession, root: String, kind: String,
-      st: CompactionState): Set[String] =
-    st.segments.filter(seg => segHasKind(s, root, kind, seg))
-      .flatMap(_.incs).toSet
+    fsOf(s, root).exists(new Path(basePath(root, kind, seg.id)))
 
   /** Increment ids currently present as `inc=<id>` subdirs of
     * `$root/$kind`. */
@@ -416,22 +351,18 @@ object Admission {
     * When the state is FULLY merged (one live segment) the returned
     * frame is exactly the bucketed segment scan — later equi-joins on
     * the match keys plan with no exchange on this side
-    * ([[AdmissionCompactSpec]]). */
-  private[graft] def readSeen(s: SparkSession, root: String, kind: String,
-      idCol: String, selfInc: String): DataFrame = {
+    * ([[AdmissionCompactSpec]]). `st` is the caller's one manifest
+    * read, so every kind of one admit comes from the same generation. */
+  private[graft] def readSeen(s: SparkSession, root: String,
+      st: CompactionState, kind: String, idCol: String,
+      selfInc: String): DataFrame = {
     val schema = schemaOf(kind, idCol)
-    val st = readManifest(s, root)
-    // probe each segment's on-disk presence ONCE: the frames and the
-    // covered-inc set both derive from it (2× fs.exists per segment
-    // would double metadata round-trips on the streaming hot path)
-    val withKind = st.segments.filter(seg => segHasKind(s, root, kind, seg))
-    val segs = withKind.map(seg =>
-      segTable(s, root, kind, st, seg)
+    val segs = st.segments.filter(seg => segHasKind(s, root, kind, seg))
+      .map(seg => segTable(s, root, kind, st, seg)
         .filter(col("inc") =!= lit(selfInc))
         .select(schema.fieldNames.map(col).toIndexedSeq: _*))
-    val covered = withKind.flatMap(_.incs).toSet
     val dirs = listIncs(s, root, kind)
-      .filterNot(covered).filterNot(_ == selfInc)
+      .filterNot(st.folded).filterNot(_ == selfInc)
       .map(id => s"$root/$kind/inc=$id")
     val incs =
       if (dirs.isEmpty) Nil
@@ -445,7 +376,7 @@ object Admission {
   private def segBytes(s: SparkSession, root: String, seg: Segment): Long = {
     val fs = fsOf(s, root)
     AllKinds.map { kind =>
-      val p = new Path(segDataPath(root, kind, seg))
+      val p = new Path(basePath(root, kind, seg.id))
       if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
     }.sum
   }
@@ -468,8 +399,10 @@ object Admission {
     *
     * Crash safety (spec-pinned by `AdmissionCompactSpec`):
     *  - before the manifest rename commits, nothing observable
-    *    changed — new segment files are orphans; segment ids advance
-    *    only on commit, so a replayed compact overwrites them;
+    *    changed — new segment files and a torn manifest temp file are
+    *    orphans; segment ids advance only on commit, so a replayed
+    *    compact overwrites the segments, and the temp file goes once
+    *    it falls out of the [[RetainManifests]] window;
     *  - after the commit, folded subdirs are already excluded by the
     *    manifest, so the cleanup phase is pure garbage collection; a
     *    crash inside it leaves debris the next [[compact]] removes;
@@ -499,24 +432,8 @@ object Admission {
     // increments stay unfolded until replayed.
     val idxIncs = committedIncs(s, root, "index").toSet
     val unfolded = committedIncs(s, root, "digests")
-      .filter(idxIncs).filterNot(st.folded)
-    // Per-kind fold inputs: the new increments, plus folded-but-
-    // UNCOVERED dirs — a legacy (round-10) segment holds an inc's
-    // index/digests but never its corpus, so the corpus dir folds
-    // now. (Safe to list such an id in the new segment's inc set:
-    // coverage is derived per kind from dirs that actually exist,
-    // and the id's keyed data is already covered by the legacy
-    // segment.)
-    def foldIds(kind: String): Seq[String] = {
-      val covered = coveredIncs(s, root, kind, st)
-      listIncs(s, root, kind).filter(id =>
-        unfolded.contains(id) || (st.folded(id) && !covered(id)))
-    }
-    val foldIdsByKind = AllKinds.map(k => k -> foldIds(k)).toMap
-    // No-op iff there is NOTHING to fold — neither new increments nor
-    // uncovered legacy payload (so `compact` on a freshly upgraded
-    // round-10 root sweeps its corpus even before any new data lands).
-    if (unfolded.isEmpty && foldIdsByKind.values.forall(_.isEmpty)) {
+      .filter(idxIncs).filterNot(st.folded).toSet
+    if (unfolded.isEmpty) {
       if (cleanup) collectGarbage(s, root, st)
       return false
     }
@@ -535,6 +452,7 @@ object Admission {
     // same call to rewrite and delete it would double the write I/O
     // of every merge round.
     val fs = fsOf(s, root)
+    val foldIdsByKind = AllKinds.map(k => k -> listIncs(s, root, k).filter(unfolded)).toMap
     val incBytes = AllKinds.map { kind =>
       foldIdsByKind(kind)
         .map(id => fs.getContentSummary(new Path(s"$root/$kind/inc=$id"))
@@ -548,8 +466,8 @@ object Admission {
     val newId = st.nextSeg
     // ---- one new segment per kind: the increments, plus (major only)
     // every live segment of that kind. index/digests are written even
-    // when empty on a real fold; the optional kinds (semidx/vecs)
-    // only where inputs exist.
+    // when empty; the optional kinds (semidx/vecs) only where inputs
+    // exist.
     // One fold write per kind, all into DISTINCT new-segment paths with
     // no cross-kind data dependency — overlapped (guide §2.6; the
     // manifest rename below stays the single commit point, so the
@@ -560,11 +478,7 @@ object Admission {
       val schema = schemaOf(kind, idCol)
       val withInc = StructType(schema.fields :+ StructField("inc", StringType))
       val dirs = foldIdsByKind(kind).map(id => s"$root/$kind/inc=$id")
-      // index/digests are force-written (even empty) only when real
-      // NEW increments folded — a legacy-corpus-only sweep must not
-      // mint empty keyed segments
-      val forceEmpty =
-        (kind == "index" || kind == "digests") && unfolded.nonEmpty
+      val forceEmpty = kind == "index" || kind == "digests"
       val anySegs = major &&
         st.segments.exists(seg => segHasKind(s, root, kind, seg))
       if (dirs.isEmpty && !anySegs && !forceEmpty) None
@@ -595,21 +509,24 @@ object Admission {
           .withColumn("inc", lit(id)))
       val corpusSegFrames =
         if (!major) Nil
-        else st.segments.map(seg => segDataPath(root, "corpus", seg))
+        else st.segments.map(seg => basePath(root, "corpus", seg.id))
           .filter(p => fs.exists(new Path(p)))
           .map(Parquet.read(s, _))
       (corpusSegFrames ++ corpusIncFrames).reduceOption(_ unionByName _).foreach(
         _.write.mode("overwrite").parquet(basePath(root, "corpus", newId)))
     }
     inParallel(s)(keyedFolds :+ corpusFold)
-    val extraFolded = foldIdsByKind.values.flatten.toSet -- unfolded.toSet
-    val segments =
+    val next = CompactionState(st.generation + 1, effBuckets, idCol, newId + 1,
       if (major) Seq(Segment(newId, st.folded ++ unfolded))
-      else st.segments :+ Segment(newId, unfolded.toSet ++ extraFolded)
+      else st.segments :+ Segment(newId, unfolded))
     // COMMIT: once this rename lands, the new generation is current.
-    writeManifest(s, root, CompactionState(
-      st.generation + 1, effBuckets, idCol, newId + 1, segments))
-    if (cleanup) collectGarbage(s, root, readManifest(s, root))
+    Manifest.commit(s, root, next.generation,
+      Seq(s"buckets=${next.buckets}", s"idcol=${next.idCol}",
+        s"nextseg=${next.nextSeg}") ++
+      next.segments.flatMap(seg => s"seg=${seg.id}" +:
+        seg.incs.toSeq.sorted.map(i => s"seginc=${seg.id}:$i")),
+      RetainManifests)
+    if (cleanup) collectGarbage(s, root, next)
     true
   }
 
@@ -634,29 +551,12 @@ object Admission {
     if (st.generation == 0) return
     val fs = fsOf(s, root)
     val live = st.segments.map(_.id).toSet
-    // both path styles are collectable: s<id> (leveled) and g<id>
-    // (legacy round-10 generations, incl. pre-upgrade debris)
-    val SegDir = "^[sg](\\d+)$".r
     for (kind <- AllKinds) {
-      // delete an inc dir only when a live segment actually HOLDS its
-      // data for this kind — a legacy segment never folded corpus, so
-      // that payload must survive until a compact sweeps it in
-      val covered = coveredIncs(s, root, kind, st)
-      for (id <- listIncs(s, root, kind) if covered(id))
+      for (id <- listIncs(s, root, kind) if st.folded(id))
         fs.delete(new Path(s"$root/$kind/inc=$id"), true)
-      val baseDir = new Path(s"$root/${kind}_base")
-      if (fs.exists(baseDir)) {
-        val dead = fs.listStatus(baseDir).map(_.getPath.getName).collect {
-          case n @ SegDir(id) if !live(id.toInt) => (n, id.toInt)
-        }
-        for ((dirName, g) <- dead) {
-          if (kind != "corpus") {
-            dropTableIfExists(s, tableName(root, kind, g))
-            if (dirName.startsWith("g"))
-              dropTableIfExists(s, legacyTableName(root, kind, g))
-          }
-          fs.delete(new Path(s"$root/${kind}_base/$dirName"), true)
-        }
+      for (g <- segDirIds(s, root, kind) if !live(g)) {
+        if (kind != "corpus") dropTableIfExists(s, tableName(root, kind, g))
+        fs.delete(new Path(basePath(root, kind, g)), true)
       }
     }
   }
@@ -723,8 +623,9 @@ object Admission {
       idCol: String = "doc_id", textCol: String = "text",
       shingleN: Int = 3, k: Int = 8, rowsPerBand: Int = 2): DataFrame = {
     val s = newDocs.sparkSession
-    val seenIndex = readSeen(s, root, "index", idCol, incId)
-    val seenDigests = readSeen(s, root, "digests", idCol, incId)
+    val st = readManifest(s, root)
+    val seenIndex = readSeen(s, root, st, "index", idCol, incId)
+    val seenDigests = readSeen(s, root, st, "digests", idCol, incId)
     val (freshKeysPlan, incIndexOf, admittedIdsOf) = admitPlan(
       newDocs, seenIndex, seenDigests, idCol, textCol, shingleN, k, rowsPerBand)
     // decision tables with MULTIPLE consumers materialize before any
@@ -927,10 +828,9 @@ object Admission {
       sys.error(s"$root holds pre-round-12 float-format vecs/ state " +
         "(no pqcb/ codebook): PQ codes and legacy floats cannot mix — " +
         "replay the increments with this binary or stay on the old one")
-    val seenIndex = readSeen(s, root, "index", idCol, incId)
-    val seenDigests = readSeen(s, root, "digests", idCol, incId)
-    val seenSem = readSeen(s, root, "semidx", idCol, incId)
-    val seenVecs = readSeen(s, root, "vecs", idCol, incId)
+    val st = readManifest(s, root)
+    val Seq(seenIndex, seenDigests, seenSem, seenVecs) =
+      KeyedKinds.map(readSeen(s, root, st, _, idCol, incId))
     val (freshKeysPlan, incIndexOf, admittedIdsOf) = admitPlan(
       newDocs, seenIndex, seenDigests, idCol, textCol, shingleN, k, rowsPerBand)
     // decision tables materialize BEFORE state writes (same boundary
@@ -1147,11 +1047,10 @@ object Admission {
   def corpus(s: SparkSession, root: String): DataFrame = {
     val st = readManifest(s, root)
     val fs = fsOf(s, root)
-    val segs = st.segments.map(seg => segDataPath(root, "corpus", seg))
+    val segs = st.segments.map(seg => basePath(root, "corpus", seg.id))
       .filter(p => fs.exists(new Path(p)))
       .map(Parquet.read(s, _))
-    val incs = committedIncs(s, root, "corpus")
-      .filterNot(coveredIncs(s, root, "corpus", st)).sorted
+    val incs = committedIncs(s, root, "corpus").filterNot(st.folded).sorted
       .map(id => Parquet.read(s, s"$root/corpus/inc=$id")
         .withColumn("inc", lit(id)))
     (segs ++ incs).reduceOption(_ unionByName _)
@@ -1169,8 +1068,7 @@ object Admission {
     val segs = st.segments
       .filter(seg => segHasKind(s, root, "index", seg))
       .map(seg => segTable(s, root, "index", st, seg))
-    val dirs = listIncs(s, root, "index")
-      .filterNot(coveredIncs(s, root, "index", st))
+    val dirs = listIncs(s, root, "index").filterNot(st.folded)
       .map(id => s"$root/index/inc=$id")
     val withInc = Parquet.footerSchema(s, dirs: _*)
       .getOrElse(indexSchema(st.idCol)).add("inc", StringType)
@@ -1193,20 +1091,8 @@ object Admission {
     * `root`). */
   def reset(s: SparkSession, root: String): Unit = {
     val fs = fsOf(s, root)
-    val SegDir = "^[sg](\\d+)$".r
-    for (kind <- KeyedKinds) {
-      val baseDir = new Path(s"$root/${kind}_base")
-      val dirs =
-        if (!fs.exists(baseDir)) Seq.empty[(String, Int)]
-        else fs.listStatus(baseDir).map(_.getPath.getName).collect {
-          case n @ SegDir(id) => (n, id.toInt)
-        }.toSeq
-      for ((dirName, g) <- dirs) {
-        dropTableIfExists(s, tableName(root, kind, g))
-        if (dirName.startsWith("g"))
-          dropTableIfExists(s, legacyTableName(root, kind, g))
-      }
-    }
+    for (kind <- KeyedKinds; g <- segDirIds(s, root, kind))
+      dropTableIfExists(s, tableName(root, kind, g))
     val p = new Path(root)
     if (fs.exists(p)) { fs.delete(p, true); () }
   }

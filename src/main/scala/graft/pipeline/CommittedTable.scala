@@ -1,15 +1,16 @@
 package graft.pipeline
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.sources.Parquet
 
 /** Atomic whole-table rewrites for the table-maintenance operators
-  * (`q_compact_files`, `q_forget_user`) — the same commit discipline
-  * [[Admission.compact]] already applies to admission state, extracted
-  * for any job that replaces a LIVE table in place (round-12 verdict
-  * item 2).
+  * (`q_compact_files`, `q_forget_user`): any job that replaces a LIVE
+  * table in place commits through the [[Manifest]] protocol, the one
+  * [[Admission.compact]] commits admission state through (round-12
+  * verdict item 2). This object owns only the `data=` body and the
+  * garbage collection of `data-*` directories.
   *
   * The problem with `write.mode("overwrite").parquet(path)` on a table
   * other jobs read: the overwrite DELETES the old files before the new
@@ -28,9 +29,9 @@ import graft.sources.Parquet
   * directory (round-13 advice: two racing writers previously staged
   * into the same `data-<N+1>` and could interleave files; unique
   * staging dirs make every committed manifest point at a directory
-  * exactly one writer wrote whole), then commits by writing the
-  * manifest file WHOLE and renaming it into place — the rename is the
-  * single atomic commit point, and the manifest CONTENT (not naming
+  * exactly one writer wrote whole), then commits generation N+1 with
+  * [[Manifest.commit]] — the rename is the single atomic commit
+  * point, and the manifest CONTENT (not naming
   * convention) is what readers resolve the data directory from. Racing
   * writers at the same generation are last-commit-wins on the rename;
   * the loser's staged directory becomes unreferenced debris a later
@@ -45,7 +46,9 @@ import graft.sources.Parquet
   * manifest and data survive until GC'd, so [[read]] with an explicit
   * `gen` serves historical snapshots — the audit/debug read every
   * production table format (Iceberg/Delta/Hudi) offers. GC keeps the
-  * newest `retain` generations (default 2: head + one behind, matching
+  * newest `retain` generations (manifests, and temp files a killed
+  * writer left, by [[Manifest.commit]]; data directories here;
+  * default 2: head + one behind, matching
   * the pre-round-14 debris bound); a snapshot reader more than
   * `retain − 1` generations behind head can lose its files to a
   * concurrent commit's GC — size `retain` to the audit window, exactly
@@ -57,50 +60,28 @@ import graft.sources.Parquet
   * than assuming a cooperating lakehouse.
   */
 object CommittedTable {
+  import Manifest.fsOf
 
-  private def fsOf(s: SparkSession, path: String): FileSystem =
-    new Path(path).getFileSystem(s.sparkContext.hadoopConfiguration)
-
-  private val GenFile = "^gen-(\\d+)$".r
   private val DataDir = "^data-(\\d+)(-.*)?$".r
 
   /** Highest committed generation under `root`, or 0 if none. */
-  def currentGen(s: SparkSession, root: String): Int = {
-    val fs = fsOf(s, root)
-    val dir = new Path(s"$root/manifest")
-    if (!fs.exists(dir)) 0
-    else {
-      val gens = fs.listStatus(dir).map(_.getPath.getName).collect {
-        case GenFile(n) => n.toInt
-      }
-      if (gens.isEmpty) 0 else gens.max
-    }
-  }
+  def currentGen(s: SparkSession, root: String): Int =
+    generations(s, root).lastOption.getOrElse(0)
 
   /** All committed generations still readable under `root`, ascending. */
-  def generations(s: SparkSession, root: String): Seq[Int] = {
-    val fs = fsOf(s, root)
-    val dir = new Path(s"$root/manifest")
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).map(_.getPath.getName).collect {
-      case GenFile(n) => n.toInt
-    }.sorted.toSeq
-  }
+  def generations(s: SparkSession, root: String): Seq[Int] =
+    Manifest.generations(s, root)
 
   /** Data directory of generation `gen` (0 = current), resolved from
     * the committed manifest's CONTENT. */
   def dataDir(s: SparkSession, root: String, gen: Int = 0): String = {
     val g = if (gen == 0) currentGen(s, root) else gen
     require(g > 0, s"no committed generation under $root")
-    val fs = fsOf(s, root)
-    val mf = new Path(s"$root/manifest/gen-$g")
-    require(fs.exists(mf),
-      s"generation $g is not committed (or was GC'd past retention) under $root")
-    val in = fs.open(mf)
-    val content =
-      try new String(in.readAllBytes(), "UTF-8").trim finally in.close()
-    require(content.startsWith("data="), s"corrupt manifest $mf: '$content'")
-    s"$root/${content.stripPrefix("data=")}"
+    Manifest.read(s, root, g) match {
+      case Seq(l) if l.startsWith("data=") => s"$root/${l.stripPrefix("data=")}"
+      case other => throw new IllegalArgumentException(
+        s"corrupt manifest gen-$g under $root: ${other.mkString("; ")}")
+    }
   }
 
   /** Read the current committed generation. */
@@ -120,38 +101,23 @@ object CommittedTable {
     * time-traveling within the `retain` window — are always safe. */
   def commit(s: SparkSession, root: String, df: DataFrame,
       shape: DataFrame => DataFrame = identity, retain: Int = 2): Int = {
-    require(retain >= 1, s"retain must keep at least the head: $retain")
-    val fs = fsOf(s, root)
     val gen = currentGen(s, root) + 1
     // unique staging dir per writer: a racing writer at the same
     // generation stages elsewhere; a crashed attempt leaves an orphan
     // a later commit's GC removes (its gen is never referenced)
-    val token = java.util.UUID.randomUUID.toString.take(8)
-    val dataName = s"data-$gen-$token"
+    val dataName = s"data-$gen-${java.util.UUID.randomUUID.toString.take(8)}"
     shape(df).write.mode("overwrite").parquet(s"$root/$dataName")
-    val dir = new Path(s"$root/manifest")
-    fs.mkdirs(dir)
-    val tmp = new Path(dir, s"gen-$gen.tmp-$token")
-    val out = fs.create(tmp, true)
-    try out.write(s"data=$dataName\n".getBytes("UTF-8")) finally out.close()
-    val dest = new Path(dir, s"gen-$gen")
-    if (fs.exists(dest)) fs.delete(dest, false)
-    if (!fs.rename(tmp, dest))
-      sys.error(s"table commit failed: $tmp -> $dest")
-    // GC only AFTER the commit point, and only PAST the retention
-    // window: manifests gen ≤ (this - retain) go first (so a time
-    // traveler can no longer resolve them), then any data directory
-    // whose generation falls outside the window and is not referenced
-    // by a surviving manifest — which also collects crashed/lost-race
+    Manifest.commit(s, root, gen, Seq(s"data=$dataName"), retain)
+    // data GC only AFTER the commit point (which already dropped the
+    // manifests past the retention window): any data directory whose
+    // generation falls outside the window and is not referenced by a
+    // surviving manifest goes — which also collects crashed/lost-race
     // staging debris. A directory at gen ≥ this one is NEVER touched:
     // it may be a concurrent writer's in-flight staging.
     val keepFrom = gen - retain + 1
-    (1 until keepFrom).foreach { g =>
-      val mf = new Path(dir, s"gen-$g")
-      if (fs.exists(mf)) fs.delete(mf, false)
-    }
     val referenced = generations(s, root)
       .map(g => new Path(dataDir(s, root, g)).getName).toSet
+    val fs = fsOf(s, root)
     fs.listStatus(new Path(root)).map(_.getPath).foreach { p =>
       p.getName match {
         case DataDir(g, _) if g.toInt < keepFrom && !referenced(p.getName) =>

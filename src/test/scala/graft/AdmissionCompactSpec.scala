@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
 import graft.pipeline.Admission
@@ -15,8 +15,12 @@ import graft.sources.Tables
   *    — only the increment shuffles;
   *  - crash safety: a compact that commits its manifest but dies
   *    before garbage collection (cleanup = false) leaves a correct,
-  *    self-healing state; a batch REPLAYED after its increment was
+  *    self-healing state; one killed before its manifest rename
+  *    changes no read, and the next compact ends where a root that
+  *    never crashed does; a batch REPLAYED after its increment was
   *    folded into the base is still idempotent;
+  *  - bounded metadata: `manifest/` keeps [[Admission.RetainManifests]]
+  *    generations however many compacts run;
   *  - session independence: a fresh catalog (simulated by dropping the
   *    table entry) re-registers the base from the manifest alone. */
 class AdmissionCompactSpec extends SparkSpec {
@@ -68,8 +72,9 @@ class AdmissionCompactSpec extends SparkSpec {
     val docs = Tables.documents(spark, dir)
     Admission.admit(docs, root, "d1")
     Admission.compact(spark, root)
-    val seenIdx = Admission.readSeen(spark, root, "index", "doc_id", "zz")
-    val seenDig = Admission.readSeen(spark, root, "digests", "doc_id", "zz")
+    val st = Admission.readManifest(spark, root)
+    val seenIdx = Admission.readSeen(spark, root, st, "index", "doc_id", "zz")
+    val seenDig = Admission.readSeen(spark, root, st, "digests", "doc_id", "zz")
     val incIdx = Seq((99L, 0, "xx")).toDF("doc_id", "band", "sig")
     val incDig = Seq("yy").toDF("digest")
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -277,93 +282,96 @@ class AdmissionCompactSpec extends SparkSpec {
     assert(ids(Admission.corpus(spark, root)) == Seq(1L, 2L, 4L))
   }
 
-  /** Build a faithful round-10 root from a round-11 one: compact with
-    * cleanup=false (so corpus/inc=d1 survives), move the keyed
-    * segments from s1 to the old g1 layout, DROP the corpus segment
-    * (v1 never folded corpus), rewrite the manifest in the v1 format
-    * (buckets/idcol/folded lines only), and clear the catalog
-    * entries. */
-  private def makeLegacyRoot(): String = {
+  test("a compact killed between its segment writes and the manifest " +
+      "rename changes no read, and the next compact recovers") {
     import spark.implicits._
-    val root = freshRoot()
-    Admission.admit(Seq(
-      (1L, "aa bb cc dd ee ff gg", "s"),
-      (2L, "oo pp qq rr ss tt uu", "s")).toDF("doc_id", "text", "source"),
-      root, "d1")
-    assert(Admission.compact(spark, root, cleanup = false))
-    for (kind <- Seq("index", "digests"))
-      assert(new java.io.File(s"$root/${kind}_base/s1")
-        .renameTo(new java.io.File(s"$root/${kind}_base/g1")))
-    def rmrf(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rmrf); f.delete(); ()
+    def build(root: String): Unit = {
+      Admission.admit(Seq(
+        (1L, "aa bb cc dd ee ff gg", "s"),
+        (2L, "oo pp qq rr ss tt uu", "s")).toDF("doc_id", "text", "source"),
+        root, "d1")
+      assert(Admission.compact(spark, root))
+      Admission.admit(Seq(
+        (3L, "aa bb cc dd ee ff gg", "s"),
+        (4L, "hh ii jj kk ll mm nn", "s")).toDF("doc_id", "text", "source"),
+        root, "d2")
     }
-    rmrf(new java.io.File(s"$root/corpus_base"))
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$root/manifest/gen-1"),
-      "buckets=8\nidcol=doc_id\nfolded=d1\n".getBytes("UTF-8"))
-    // the direct rewrite invalidates Hadoop local-FS's checksum sidecar
-    new java.io.File(s"$root/manifest/.gen-1.crc").delete()
+    def reads(root: String): (Seq[String], Seq[String]) = (
+      Admission.corpus(spark, root).select("doc_id", "inc")
+        .collect().map(_.toString).sorted.toSeq,
+      Admission.index(spark, root).select("doc_id", "band", "sig", "inc")
+        .collect().map(_.toString).sorted.toSeq)
+    val root = freshRoot()
+    build(root)
+    val st = Admission.readManifest(spark, root)
+    val before = reads(root)
+    // the kill: every segment write of the fold lands, the rename does
+    // not. Run the fold without GC, take its manifest back, leave a torn
+    // temp file in its place and lose the session's catalog entries.
+    assert(Admission.compact(spark, root, cleanup = false))
+    val gen = st.generation + 1
+    Files.delete(Paths.get(s"$root/manifest/gen-$gen"))
+    Files.deleteIfExists(Paths.get(s"$root/manifest/.gen-$gen.crc"))
+    Files.write(Paths.get(s"$root/manifest/gen-$gen.tmp-0badf00d"),
+      "buckets=8\nidcol=doc_id\nnexts".getBytes("UTF-8"))
     spark.catalog.listTables().collect()
       .filter(_.name.startsWith("graft_adm_"))
       .foreach(t => spark.sql(s"DROP TABLE ${t.name}"))
-    assert(new java.io.File(s"$root/corpus/inc=d1").exists, "v1 shape")
-    root
-  }
-
-  test("a pre-leveled (round-10) root upgrades in place: legacy manifest, " +
-      "g-style base dirs, corpus still in inc dirs") {
-    import spark.implicits._
-    val root = makeLegacyRoot()
-
-    // the legacy state must SERVE: corpus from the inc dir, dedup
-    // through the g1 segments
-    val st = Admission.readManifest(spark, root)
-    assert(st.segments.map(s0 => (s0.id, s0.legacy)) == Seq((1, true)), st.toString)
-    assert(ids(Admission.corpus(spark, root)) == Seq(1L, 2L))
-    val got = ids(Admission.admit(Seq(
-      (3L, "aa bb cc dd ee ff gg", "s"),
-      (4L, "fresh words after the upgrade", "s"))
-      .toDF("doc_id", "text", "source"), root, "d2"))
-    assert(got == Seq(4L), s"legacy segment must reject the dup: $got")
-    // GC during that admit/compact must NOT remove the uncovered
-    // corpus payload
-    assert(new java.io.File(s"$root/corpus/inc=d1").exists)
-    // the next compact sweeps the legacy corpus in and (size tier)
-    // merges the legacy segment away into the new s-style layout
+    for (kind <- Seq("index", "digests", "corpus"))
+      assert(new java.io.File(s"$root/${kind}_base/s${st.nextSeg}").exists,
+        s"the killed fold must leave an orphan $kind segment")
+    assert(Admission.readManifest(spark, root) == st)
+    assert(reads(root) == before, "a read saw the uncommitted fold")
+    // the next compact reuses the orphan's segment id and ends where a
+    // root that never crashed does
     assert(Admission.compact(spark, root))
+    val clean = freshRoot()
+    build(clean)
+    assert(Admission.compact(spark, clean))
+    assert(Admission.readManifest(spark, root) == Admission.readManifest(spark, clean))
+    assert(reads(root) == reads(clean))
     assert(ids(Admission.corpus(spark, root)) == Seq(1L, 2L, 4L))
-    val st2 = Admission.readManifest(spark, root)
-    assert(st2.segments.forall(!_.legacy), st2.toString)
-    assert(!new java.io.File(s"$root/index_base/g1").exists,
-      "dead legacy generation must be collected")
-    assert(!new java.io.File(s"$root/corpus/inc=d1").exists,
-      "once covered by a segment, the legacy corpus inc dir is collectable")
-    // and the folded corpus still reads back in full
-    assert(Admission.corpus(spark, root).select("inc").distinct().count() == 2)
   }
 
-  test("an upgraded root sweeps its legacy corpus without waiting for " +
-      "new increments") {
-    val root = makeLegacyRoot()
-    // no new data has landed — compact must STILL fold the v1 corpus
-    // inc dirs (the listing problem the upgrade is meant to fix), not
-    // no-op because nothing is 'unfolded'. mergeFactor pins the MINOR
-    // path so the no-empty-keyed-segments assertion below is exact.
-    assert(Admission.compact(spark, root, mergeFactor = 1e9),
-      "corpus-only sweep must count as real work")
-    assert(!new java.io.File(s"$root/corpus/inc=d1").exists,
-      "legacy corpus inc dir must be folded and collected")
-    assert(new java.io.File(s"$root/corpus_base").exists)
-    assert(ids(Admission.corpus(spark, root)) == Seq(1L, 2L))
-    // the sweep minted no empty keyed segments
-    val st = Admission.readManifest(spark, root)
-    val sweep = st.segments.filter(!_.legacy)
-    assert(sweep.nonEmpty)
-    for (seg <- sweep; kind <- Seq("index", "digests"))
-      assert(!new java.io.File(s"$root/${kind}_base/s${seg.id}").exists,
-        s"corpus-only sweep wrote an empty $kind segment")
-    // and a second sweep with still nothing new is a true no-op
-    assert(!Admission.compact(spark, root, mergeFactor = 1e9))
+  test("manifest/ keeps at most RetainManifests generations however many " +
+      "compacts run") {
+    import spark.implicits._
+    val root = freshRoot()
+    for (i <- 1 to 5) {
+      Admission.admit(Seq((i.toLong, s"a$i b$i c$i d$i e$i f$i", "s"))
+        .toDF("doc_id", "text", "source"), root, s"d$i")
+      assert(Admission.compact(spark, root))
+    }
+    assert(Admission.readManifest(spark, root).generation == 5)
+    val gens = new java.io.File(s"$root/manifest").list().toSeq
+      .filter(_.matches("gen-\\d+"))
+    assert(gens.nonEmpty && gens.size <= Admission.RetainManifests,
+      s"manifest/ grows with every compact: ${gens.sorted}")
+    assert(ids(Admission.corpus(spark, root)) == (1L to 5L))
+  }
+
+  test("a manifest in the pre-leveled single-base format fails loudly") {
+    import spark.implicits._
+    val root = freshRoot()
+    Admission.admit(Seq((1L, "aa bb cc dd ee ff gg", "s"))
+      .toDF("doc_id", "text", "source"), root, "d1")
+    assert(Admission.compact(spark, root))
+    // that format has no nextseg=/seg= lines, only a flat folded= list
+    Files.write(Paths.get(s"$root/manifest/gen-1"),
+      "buckets=8\nidcol=doc_id\nfolded=d1\n".getBytes("UTF-8"))
+    // the direct rewrite invalidates Hadoop local-FS's checksum sidecar
+    Files.deleteIfExists(Paths.get(s"$root/manifest/.gen-1.crc"))
+    val next = Seq((2L, "hh ii jj kk ll mm nn", "s")).toDF("doc_id", "text", "source")
+    for ((what, call) <- Seq[(String, () => Any)](
+        "readManifest" -> (() => Admission.readManifest(spark, root)),
+        "corpus" -> (() => Admission.corpus(spark, root)),
+        "index" -> (() => Admission.index(spark, root)),
+        "admit" -> (() => Admission.admit(next, root, "d2")),
+        "compact" -> (() => Admission.compact(spark, root)))) {
+      val e = intercept[RuntimeException](call())
+      assert(e.getMessage.contains("pre-leveled single-base format"),
+        s"$what: ${e.getMessage}")
+    }
   }
 
   test("compact inherits the root's bucketing metadata: a different " +

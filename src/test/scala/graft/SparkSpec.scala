@@ -9,6 +9,15 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   def resource(name: String): String =
     getClass.getResource(s"/$name").getPath
+
+  /** Run `body` with session conf `key` set to `value`, then restore
+    * the previous setting: the session is shared by every suite in the
+    * JVM, so a conf a case leaves behind changes what later suites do. */
+  def withConf[A](key: String, value: String)(body: => A): A = {
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }
 
 object SparkSpec {

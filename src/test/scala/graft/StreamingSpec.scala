@@ -23,42 +23,44 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("multi-micro-batch stream converges to the same result") {
-    // split events into 4 files -> maxFilesPerTrigger=1 gives 4 batches
-    val splitDir = java.nio.file.Files.createTempDirectory("evsplit").toString
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read.parquet(s"$dir/events.parquet")
-      .repartition(4).write.mode("overwrite").parquet(splitDir)
-    val stream = EventStreams.hourlyCounts(
-      EventStreams.readSplitStream(spark, splitDir))
-    val q = stream.writeStream
-      .format("memory").queryName("hourly_multi")
-      .outputMode("complete")
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    assert(q.recentProgress.length >= 4, s"expected >=4 micro-batches, saw ${q.recentProgress.length}")
-    val got = spark.table("hourly_multi")
-      .orderBy("hour_start", "event_type").collect().toSeq
-    val want = Catalog.byName("q_hourly_events").fn(spark, dir).collect().toSeq
-    assert(got == want)
+    withConf("spark.sql.legacy.parquet.nanosAsLong", "true") {
+      // split events into 4 files -> maxFilesPerTrigger=1 gives 4 batches
+      val splitDir = java.nio.file.Files.createTempDirectory("evsplit").toString
+      spark.read.parquet(s"$dir/events.parquet")
+        .repartition(4).write.mode("overwrite").parquet(splitDir)
+      val stream = EventStreams.hourlyCounts(
+        EventStreams.readSplitStream(spark, splitDir))
+      val q = stream.writeStream
+        .format("memory").queryName("hourly_multi")
+        .outputMode("complete")
+        .start()
+      try q.processAllAvailable() finally q.stop()
+      assert(q.recentProgress.length >= 4, s"expected >=4 micro-batches, saw ${q.recentProgress.length}")
+      val got = spark.table("hourly_multi")
+        .orderBy("hour_start", "event_type").collect().toSeq
+      val want = Catalog.byName("q_hourly_events").fn(spark, dir).collect().toSeq
+      assert(got == want)
+    }
   }
 
   test("dropDuplicatesWithinWatermark dedups repeats across micro-batches") {
-    // two files with the SAME events -> every id arrives twice
-    val dupDir = java.nio.file.Files.createTempDirectory("evdup").toString
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val once = spark.read.parquet(s"$dir/events.parquet")
-    once.coalesce(1).write.mode("overwrite").parquet(dupDir)
-    once.coalesce(1).write.mode("append").parquet(dupDir)
-    val stream = EventStreams.dedupWithinWatermark(
-      EventStreams.readSplitStream(spark, dupDir))
-    val q = stream.writeStream
-      .format("memory").queryName("dedup_out")
-      .outputMode("append")
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    val total = spark.table("dedup_out").count()
-    val distinctIds = once.select("event_id").distinct().count()
-    assert(total == distinctIds, s"emitted $total, want $distinctIds unique events")
+    withConf("spark.sql.legacy.parquet.nanosAsLong", "true") {
+      // two files with the SAME events -> every id arrives twice
+      val dupDir = java.nio.file.Files.createTempDirectory("evdup").toString
+      val once = spark.read.parquet(s"$dir/events.parquet")
+      once.coalesce(1).write.mode("overwrite").parquet(dupDir)
+      once.coalesce(1).write.mode("append").parquet(dupDir)
+      val stream = EventStreams.dedupWithinWatermark(
+        EventStreams.readSplitStream(spark, dupDir))
+      val q = stream.writeStream
+        .format("memory").queryName("dedup_out")
+        .outputMode("append")
+        .start()
+      try q.processAllAvailable() finally q.stop()
+      val total = spark.table("dedup_out").count()
+      val distinctIds = once.select("event_id").distinct().count()
+      assert(total == distinctIds, s"emitted $total, want $distinctIds unique events")
+    }
   }
 
   test("streaming sliding window equals the batch q_sliding_window") {
@@ -175,35 +177,36 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("checkpointed query restarts without reprocessing or duplicating") {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val srcDir = java.nio.file.Files.createTempDirectory("ckpt-src").toString
-    val outDir = java.nio.file.Files.createTempDirectory("ckpt-out").toString + "/t"
-    val ckpt = java.nio.file.Files.createTempDirectory("ckpt-ck").toString
-    val once = spark.read.parquet(s"$dir/events.parquet")
-    once.coalesce(1).write.mode("overwrite").parquet(srcDir)
-    once.coalesce(1).write.mode("append").parquet(srcDir)
+    withConf("spark.sql.legacy.parquet.nanosAsLong", "true") {
+      val srcDir = java.nio.file.Files.createTempDirectory("ckpt-src").toString
+      val outDir = java.nio.file.Files.createTempDirectory("ckpt-out").toString + "/t"
+      val ckpt = java.nio.file.Files.createTempDirectory("ckpt-ck").toString
+      val once = spark.read.parquet(s"$dir/events.parquet")
+      once.coalesce(1).write.mode("overwrite").parquet(srcDir)
+      once.coalesce(1).write.mode("append").parquet(srcDir)
 
-    def run(): Unit = {
-      val q = EventStreams.dedupWithinWatermark(
-          EventStreams.readSplitStream(spark, srcDir))
-        .writeStream.format("parquet")
-        .option("path", outDir).option("checkpointLocation", ckpt)
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
+      def run(): Unit = {
+        val q = EventStreams.dedupWithinWatermark(
+            EventStreams.readSplitStream(spark, srcDir))
+          .writeStream.format("parquet")
+          .option("path", outDir).option("checkpointLocation", ckpt)
+          .outputMode("append").start()
+        try q.processAllAvailable() finally q.stop()
+      }
+
+      run()
+      val n1 = spark.read.parquet(outDir).count()
+      assert(n1 == once.select("event_id").distinct().count())
+      // restart with no new input: the checkpoint must prevent any
+      // reprocessing — same files, same output, no duplicates
+      run()
+      assert(spark.read.parquet(outDir).count() == n1)
+      // a third copy arrives after restart: every row is either late
+      // (beyond watermark) or a known id (still in state) — nothing new
+      once.coalesce(1).write.mode("append").parquet(srcDir)
+      run()
+      assert(spark.read.parquet(outDir).count() == n1)
     }
-
-    run()
-    val n1 = spark.read.parquet(outDir).count()
-    assert(n1 == once.select("event_id").distinct().count())
-    // restart with no new input: the checkpoint must prevent any
-    // reprocessing — same files, same output, no duplicates
-    run()
-    assert(spark.read.parquet(outDir).count() == n1)
-    // a third copy arrives after restart: every row is either late
-    // (beyond watermark) or a known id (still in state) — nothing new
-    once.coalesce(1).write.mode("append").parquet(srcDir)
-    run()
-    assert(spark.read.parquet(outDir).count() == n1)
   }
 
   test("foreachBatch partitioned sink lands every event exactly once") {

@@ -149,12 +149,6 @@ class TablesContractSpec extends SparkSpec {
   // ---- footer schemas: Parquet.read must hand out exactly the schema
   // Spark's own inference finds, without the inference job
 
-  private def withConf[A](key: String, value: String)(body: => A): A = {
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, value)
-    try body finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-  }
-
   private def assertFooterSchema(path: String): Unit = {
     val inferred = spark.read.parquet(path).schema
     val footer = Parquet.read(spark, path).schema
