@@ -20,9 +20,10 @@ import graft.query.KMeans
   *  - the centroid table (k×dim doubles) is the only broadcast;
   *  - the cluster assignment is computed ONCE: [[run]] persists it
   *    before feeding both sides of the self-join — the
-  *    materialize-then-release rule of [[Dedup.embedNearDupBucketedPlan]]
-  *    / [[KMeans.run]]. The catalog's `q_semantic_dedup` gate row runs
-  *    through this API, so the single-evaluation plan is the
+  *    materialize-then-release rule of
+  *    [[Dedup.embedNearDupBucketedPlan]]. The catalog's
+  *    `q_semantic_dedup` gate row runs through this API, so the
+  *    single-evaluation plan is the
   *    hash-checked one (`SemanticDedupSpec` pins that both self-join
   *    sides read the cached assignment and that the cache is released
   *    after the call).
@@ -44,7 +45,7 @@ object SemanticDedup {
     vf.register(emb.sparkSession)
     val asg = KMeans.assign(
         emb.select(col(idCol), col(vecCol).cast("array<double>").as("e")),
-        centroids, idCol)
+        centroids, Seq(idCol))
       .select(col(idCol), col("e"), col("cluster"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val a = asg.select(col(idCol).as("sd_a"), col("e").as("ea"), col("cluster"))
@@ -64,11 +65,11 @@ object SemanticDedup {
 
   /** Semantic dedup of `emb` (idCol, vecCol) against a coarse
     * `centroids` table ((cluster, cvec) — e.g. [[KMeans.centroids]] of
-    * a clustered sample, or a [[KMeans.run]] result). Returns one row
-    * per input vector: (idCol, cluster, kept). The verified survivor
-    * table (small relative to the corpus at real thresholds) is
-    * materialized while the assignment cache is alive, then the cache
-    * is released — nothing persists past the call. */
+    * a clustered sample, or the table [[KMeans.train]] returns).
+    * Returns one row per input vector: (idCol, cluster, kept). The
+    * verified survivor table (small relative to the corpus at real
+    * thresholds) is materialized while the assignment cache is alive,
+    * then the cache is released — nothing persists past the call. */
   def run(emb: DataFrame, idCol: String, vecCol: String,
       centroids: DataFrame, threshold: Double): DataFrame = {
     val (plan, release) = runPlan(emb, idCol, vecCol, centroids, threshold)

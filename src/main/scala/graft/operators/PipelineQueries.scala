@@ -126,6 +126,20 @@ object PipelineQueries {
   private def scalePath(root: String, sfDir: String): String =
     s"$root/${scaleName(sfDir)}"
 
+  /** Per-run root `<base>/<sf>/<applicationId>` of a maintenance row
+    * that writes a table copy each run: concurrent runs write disjoint
+    * dirs, a same-JVM reader derives the same path, and the root is
+    * registered with `deleteOnExit` so it goes when the JVM closes its
+    * filesystems (every such row's oracle reads the original tables). */
+  def runRoot(s: SparkSession, base: String, sfDir: String): String = {
+    val root = new org.apache.hadoop.fs.Path(
+      s"${scalePath(base, sfDir)}/${s.sparkContext.applicationId}")
+    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
+    fs.mkdirs(root)
+    fs.deleteOnExit(root)
+    root.toString
+  }
+
   def sinkPath(sfDir: String): String = scalePath(sinkRoot, sfDir)
 
   /** The driver runs the correctness gate at sf0.01 (TESTDATA.md /
@@ -445,14 +459,10 @@ object PipelineQueries {
 
   /** Unlike the roundtrip sinks (whose oracle SQL must read the same
     * static path), the prune oracle recomputes from the ORIGINAL
-    * events table — so this destination can and does carry a per-run
-    * unique suffix (the Spark application id). Two concurrent runs
-    * (bench racing verify, parallel sbt invocations) write disjoint
-    * directories instead of interleaving `mode(overwrite)` on one
-    * (round-11 advice); a same-JVM reader (the gate row, the spec's
-    * plan pin) derives the identical path from its session. */
+    * events table — so this destination is a per-run [[runRoot]]; the
+    * gate row and the spec's plan pin derive the same path. */
   def prunePath(s: SparkSession, sfDir: String): String =
-    s"${scalePath(pruneRoot, sfDir)}/${s.sparkContext.applicationId}"
+    runRoot(s, pruneRoot, sfDir)
 
   /** The pruned day's aggregate, shared by the gate row (post-write
     * read-back) and the spec's plan pin. */
@@ -477,12 +487,11 @@ object PipelineQueries {
     * (`files_reduced`, `rows_equal` — the q_approx_distinct contract
     * pattern: file counts are engine internals no SQL oracle can
     * recompute, so the oracle asserts the CONTRACT while the spec
-    * pins the physical file counts). Per-run unique destination (the
-    * q_partition_prune race fix). */
-  def compactRoot = "/tmp/graft_compact_files"
+    * pins the physical file counts). Per-run [[runRoot]]. */
+  val compactRoot = "/tmp/graft_compact_files"
   def compactFilesRun(s: SparkSession, d: String,
       targetBytes: Long = 8L << 20): (DataFrame, Int, Int) = {
-    val dest = s"${scalePath(compactRoot, d)}/${s.sparkContext.applicationId}"
+    val dest = runRoot(s, compactRoot, d)
     val ev = Tables.events(s, d)
       .select(col("event_id"), col("event_type"),
         round(col("value") * 100).cast("long").as("cents"))
@@ -543,11 +552,11 @@ object PipelineQueries {
     * runs per partition-pruned slice (`q_partition_prune`'s layout
     * confines it to the partitions the cohort touches) and the
     * driver-side audit counts below are exactly the numbers the
-    * compliance log wants. Per-run unique destination. */
+    * compliance log wants. Per-run [[runRoot]]. */
+  val forgetRoot = "/tmp/graft_forget"
   private def forgetUser(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val dest =
-      s"${scalePath("/tmp/graft_forget", d)}/${s.sparkContext.applicationId}"
+    val dest = runRoot(s, forgetRoot, d)
     val ev = Tables.events(s, d).select("event_id", "user_id", "event_type")
     val total = ev.count()
     // manifest-committed rewrite (round-12 verdict item 2): the cohort
@@ -598,9 +607,10 @@ object PipelineQueries {
     * generation for the old manifest) hash-fails, not just
     * spec-fails. `retain = 3` keeps the before-image inside the GC
     * window while the next commit lands. */
+  val ttravelRoot = "/tmp/graft_ttravel"
   private def tableTimeTravel(s: SparkSession, d: String): DataFrame = {
-    val dest = s"${scalePath("/tmp/graft_ttravel", d)}/" +
-      s"${s.sparkContext.applicationId}/run-${ttRunId.incrementAndGet()}"
+    val dest =
+      s"${runRoot(s, ttravelRoot, d)}/run-${ttRunId.incrementAndGet()}"
     val ev = Tables.events(s, d).select("event_id", "user_id")
     val gBefore = graft.pipeline.CommittedTable.commit(s, dest, ev, retain = 3)
     graft.pipeline.CommittedTable.commit(s, dest,

@@ -600,7 +600,7 @@ object TextQueries {
 
   /** Per-language stopword-vote scores over `text` — ONE definition
     * shared by [[langId]] and [[langConfusion]] so the per-doc row and
-    * the confusion matrix cannot drift (the coarseProbe/funnelTimes
+    * the confusion matrix cannot drift (the probe/funnelTimes
     * drift-proofing pattern). */
   private def langScoreCols: Seq[(String, Column)] = {
     val w = words(col("text"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Q
 import graft.functions.VectorFunctions
+import graft.query.KMeans
 import graft.sources.Tables
 
 /** Similarity search over the `embeddings` table (Array[Float], dim=64):
@@ -34,6 +35,55 @@ object VectorQueries {
   private def sqd(a: Column, b: Column): Column = VectorFunctions.vecSqDist(a, b)
 
   private def asDouble(c: Column): Column = c.cast("array<double>")
+
+  /** The query of the vector-search rows: vector 0, as 1-row (qe). */
+  private def query0(emb: DataFrame): DataFrame =
+    emb.filter(col("vec_id") === 0).select(asDouble(col("embedding")).as("qe"))
+
+  /** Exact-cosine top-k of candidates (vec_id, e) against the 1-row
+    * query `q`, ranked on the 4-decimal cosine with id tiebreaks. */
+  private def rerank(cands: DataFrame, q: DataFrame, k: Int): DataFrame =
+    cands.crossJoin(broadcast(q))
+      .select(col("vec_id"), round(dot(col("e"), col("qe")) /
+        (sqrt(dot(col("e"), col("e"))) * sqrt(dot(col("qe"), col("qe")))),
+        4).as("cos_sim"))
+      .orderBy(col("cos_sim").desc, col("vec_id"))
+      .limit(k)
+
+  /** Points seeded by their label: (vec_id, cluster = label, e). */
+  private def labeled(emb: DataFrame): DataFrame =
+    emb.select(col("vec_id"), col("label").cast("int").as("cluster"),
+      asDouble(col("embedding")).as("e"))
+
+  /** Per-label mean centroids (cluster = label, cvec): the untrained
+    * coarse quantizer and the PQ stand-in codebook. The vector goes in
+    * as an expression, not a projected column, so Catalyst infers no
+    * non-empty-array filter below the scan's fan-out exchange. */
+  private def labelCentroids(emb: DataFrame): DataFrame =
+    KMeans.centroids(emb, Seq("label"), asDouble(col("embedding")))
+      .withColumnRenamed("label", "cluster")
+
+  /** PQ points: one row per (vec_id, sub) with the `subDim`-dim slice
+    * `sv` of subspace `sub`. */
+  private def subvectors(emb: DataFrame, vecCol: String = "embedding",
+      nSub: Int = 8, subDim: Int = 8): DataFrame = emb
+    .select(col("vec_id"), asDouble(col(vecCol)).as("e"))
+    .select(col("vec_id"),
+      explode(sequence(lit(0), lit(nSub - 1))).as("sub"), col("e"))
+    .select(col("vec_id"), col("sub"),
+      expr(s"slice(e, sub * $subDim + 1, $subDim)").as("sv"))
+
+  /** Full-dim centroids (cluster, cvec) cut into 8 subspace codebooks
+    * (sub, cluster, cvec — 8-dim). */
+  private def sliced(cent: DataFrame): DataFrame = cent
+    .select(explode(sequence(lit(0), lit(7))).as("sub"), col("cluster"),
+      col("cvec"))
+    .withColumn("cvec", expr("slice(cvec, sub * 8 + 1, 8)"))
+
+  /** L2 code per (vec_id, sub): (vec_id, sub, cluster, d2). */
+  private def pqAssign(pts: DataFrame, cb: DataFrame): DataFrame =
+    KMeans.assign(pts, cb, Seq("vec_id", "sub"), KMeans.L2,
+      vecCol = "sv", part = Seq("sub"))
 
   /** Matryoshka (MRL) two-stage retrieval (Kusupati et al., NeurIPS
     * 2022): rank the corpus CHEAPLY on the 16-dim prefix of the
@@ -270,10 +320,9 @@ object VectorQueries {
     VectorFunctions.register(s)
     val emb = Tables.embeddings(s, d)
     // coarse quantizer: per-label mean centroids of the base table
-    val cent = graft.query.KMeans.centroids(
-      emb.select(col("label").as("cluster"), asDouble(col("embedding")).as("e")))
     graft.dedup.SemanticDedup
-      .run(plantedEmbeddings(s, d), "vec_id", "e", cent, threshold = 0.99)
+      .run(plantedEmbeddings(s, d), "vec_id", "e", labelCentroids(emb),
+        threshold = 0.99)
       .orderBy("vec_id")
   }
 
@@ -298,88 +347,55 @@ object VectorQueries {
     "SELECT vec_id, cluster, vec_id NOT IN (SELECT vb FROM losers) AS kept " +
     "FROM asg ORDER BY vec_id"
 
-  /** IVF-style probed search: coarse-quantize by per-label centroid,
-    * probe the 2 closest clusters to the query, brute-force only there. */
-  /** Coarse IVF probe over PER-LABEL centroids — the zero-training
-    * baseline `q_ivf_topk` keeps (labels as cells): the `nProbe`
-    * labels whose centroid ([[pqCodebook]] — the same mean-vector
-    * table) is most cosine-similar to the broadcast 1-row query. The
-    * TRAINED quantizer ([[trainedCoarse]]) replaces this in
-    * `q_ivf_trained` and the IVFADC row. */
-  private def coarseProbe(emb: DataFrame, q: DataFrame, nProbe: Int): DataFrame =
-    pqCodebook(emb).crossJoin(broadcast(q))
-      .select(col("c_label").as("label"),
-        (dot(col("cvec"), col("qe")) /
-          (sqrt(dot(col("cvec"), col("cvec"))) * sqrt(dot(col("qe"), col("qe"))))).as("c"))
-      .orderBy(col("c").desc, col("label"))
-      .limit(nProbe)
-      .select("label")
-
-  private def ivfTopk(s: SparkSession, d: String): DataFrame = {
-    VectorFunctions.register(s)
-    val emb = Tables.embeddings(s, d)
-    val q = emb.filter(col("vec_id") === 0)
-      .select(asDouble(col("embedding")).as("qe"))
-    val probed = coarseProbe(emb, q, nProbe = 2)
-    emb.join(broadcast(probed), "label")
-      .crossJoin(broadcast(q))
-      .select(col("vec_id"),
-        (dot(asDouble(col("embedding")), col("qe")) /
-          (sqrt(dot(asDouble(col("embedding")), asDouble(col("embedding")))) *
-           sqrt(dot(col("qe"), col("qe"))))).as("c"))
-      .select(col("vec_id"), round(col("c"), 4).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-      .limit(5)
-  }
-
-  /** TRAINED IVF coarse quantizer — 2 spherical-Lloyd rounds from the
-    * label seed ([[graft.query.KMeans]] primitives), closing the
-    * round-11 residual that the coarse cells were per-label stand-ins:
-    * a real IVF index stores vectors under TRAINED cell centroids and
-    * probes those (Jégou et al. 2011 §III). Returns (centroids
-    * (cluster, cvec) — the LAST round's, the ones the assignment was
-    * made against, which is what probing must rank — and the final
-    * assignment (vec_id, e, cluster, sim)). Scale shape = KMeans.run's:
-    * the corpus persists once; per round only the k×dim centroid
-    * table crosses the cluster (broadcast into the scan-stage argmax);
-    * lineage localCheckpoint-cut. */
-  private def trainedCoarse(s: SparkSession, emb: DataFrame)
-      : (DataFrame, DataFrame) = {
-    VectorFunctions.register(s)
-    import graft.query.KMeans
-    val v = emb.select(col("vec_id"), asDouble(col("embedding")).as("e"),
-        col("label").cast("int").as("cluster"))
-      .persist()
-    // tieDecimals = 9: the gate oracles replay BOTH Lloyd rounds as
-    // DuckDB CTEs, so every argmax must be quantized identically on
-    // both engines or a ~1e-15 summation-order difference can flip a
-    // near-tied assignment nondeterministically as fixtures change
-    val cent1 = KMeans.centroids(v).localCheckpoint()
-    val a1 = KMeans.assign(v.select("vec_id", "e"), cent1, "vec_id",
-      tieDecimals = 9)
-    val cent2 = KMeans.centroids(a1).localCheckpoint()
-    val a2 = KMeans.assign(v.select("vec_id", "e"), cent2, "vec_id",
-      tieDecimals = 9)
-      .localCheckpoint()
-    v.unpersist()
-    (cent2, a2)
-  }
-
-  /** The `nProbe` TRAINED cells ranked by query-centroid cosine
-    * (broadcast k-row centroids × 1-row query; ties to the smaller
-    * cluster id — the [[coarseProbe]] rule over trained cells). The
-    * ranking key is quantized to 9 decimals, like the training argmax,
-    * so the probe decision is engine-reproducible too. */
-  private def trainedProbe(cent: DataFrame, q: DataFrame,
-      nProbe: Int): DataFrame =
+  /** The `nProbe` cells (cluster) whose centroid is most
+    * cosine-similar to the broadcast 1-row query `q` (broadcast k-row
+    * centroids × 1-row query; ties to the smaller cluster id).
+    * `tieDecimals >= 0` quantizes the ranking key like the training
+    * argmax, so a trained probe is engine-reproducible too. */
+  private def probe(cent: DataFrame, q: DataFrame, nProbe: Int,
+      tieDecimals: Int = -1): DataFrame =
     cent.crossJoin(broadcast(q))
       .select(col("cluster"),
         (dot(col("cvec"), col("qe")) /
           (sqrt(dot(col("cvec"), col("cvec"))) *
            sqrt(dot(col("qe"), col("qe"))))).as("c"))
-      .orderBy(round(col("c"), 9).desc, col("cluster"))
+      .orderBy((if (tieDecimals >= 0) round(col("c"), tieDecimals)
+        else col("c")).desc, col("cluster"))
       .limit(nProbe)
       .select("cluster")
+
+  /** IVF-style probed search over PER-LABEL centroids — the
+    * zero-training baseline (labels as cells): probe the 2 labels
+    * closest to the query, brute-force only there. The TRAINED
+    * quantizer ([[trainedCoarse]]) replaces this in `q_ivf_trained`
+    * and the IVFADC rows. */
+  private def ivfTopk(s: SparkSession, d: String): DataFrame = {
+    VectorFunctions.register(s)
+    val emb = Tables.embeddings(s, d)
+    val q = query0(emb)
+    val probed = probe(labelCentroids(emb), q, nProbe = 2)
+      .withColumnRenamed("cluster", "label")
+    rerank(emb.join(broadcast(probed), "label")
+      .select(col("vec_id"), asDouble(col("embedding")).as("e")), q, 5)
+  }
+
+  /** TRAINED IVF coarse quantizer — 2 cosine Lloyd rounds
+    * ([[KMeans.train]]) from the label seed, closing the round-11
+    * residual that the coarse cells were per-label stand-ins: a real
+    * IVF index stores vectors under TRAINED cell centroids and probes
+    * those (Jégou et al. 2011 §III). Returns (the LAST round's
+    * centroids (cluster, cvec) — the ones the assignment was made
+    * against, which is what probing must rank — and the final
+    * assignment (vec_id, e, cluster, sim)). */
+  private def trainedCoarse(s: SparkSession, emb: DataFrame)
+      : (DataFrame, DataFrame) = {
+    // tieDecimals = 9: the gate oracles replay BOTH Lloyd rounds as
+    // DuckDB CTEs, so every argmax must be quantized identically on
+    // both engines or a ~1e-15 summation-order difference can flip a
+    // near-tied assignment nondeterministically as fixtures change
+    KMeans.train(labeled(emb), Seq("vec_id"), "cluster", iters = 2,
+      KMeans.Cosine, tieDecimals = 9)
+  }
 
   /** IVF search over the TRAINED index: probe the `nProbe` closest
     * trained cells, exact-cosine-rank only the vectors ASSIGNED to
@@ -392,17 +408,9 @@ object VectorQueries {
       nProbe: Int = 2, k: Int = 5): DataFrame = {
     val emb = Tables.embeddings(s, d)
     val (cent, asg) = trainedCoarse(s, emb)
-    val q = emb.filter(col("vec_id") === 0)
-      .select(asDouble(col("embedding")).as("qe"))
-    asg.join(broadcast(trainedProbe(cent, q, nProbe)), "cluster")
-      .crossJoin(broadcast(q))
-      .select(col("vec_id"),
-        (dot(col("e"), col("qe")) /
-          (sqrt(dot(col("e"), col("e"))) * sqrt(dot(col("qe"), col("qe")))))
-          .as("c"))
-      .select(col("vec_id"), round(col("c"), 4).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-      .limit(k)
+    val q = query0(emb)
+    rerank(asg.join(broadcast(probe(cent, q, nProbe, tieDecimals = 9)),
+      "cluster"), q, k)
   }
 
   private def ivfTrained(s: SparkSession, d: String): DataFrame =
@@ -474,33 +482,16 @@ object VectorQueries {
   /** One deterministic Lloyd (k-means) step — the index-build primitive
     * behind IVF clustering: centroids = current per-label means, then
     * every vector re-assigns to its max-cosine centroid (ties broken by
-    * smallest label). The 10-row centroid table broadcasts; assignment
-    * is scan-stage dot products plus a per-vector 1-row window — the
-    * shape that iterates unchanged at 100 TB (only the k×dim centroid
-    * table ever crosses the cluster between steps). */
+    * smallest label) — [[KMeans.centroids]] + [[KMeans.assign]], the
+    * round [[KMeans.train]] iterates. The 10-row centroid table
+    * broadcasts; assignment is scan-stage dot products plus a
+    * per-vector 1-row window. */
   private def kmeansStep(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    VectorFunctions.register(s)
     val emb = Tables.embeddings(s, d)
-    val cent = emb
-      .select(col("label"), posexplode(asDouble(col("embedding"))))
-      .groupBy("label", "pos").agg(avg("col").as("m"))
-      .groupBy("label")
-      .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("cs"))
-      .select(col("label").as("c_label"),
-        transform(col("cs"), x => x.getField("m")).as("cvec"))
-    val scored = emb.crossJoin(broadcast(cent))
-      .select(col("vec_id"), col("label"),
-        col("c_label"),
-        (dot(asDouble(col("embedding")), col("cvec")) /
-          (sqrt(dot(asDouble(col("embedding")), asDouble(col("embedding")))) *
-           sqrt(dot(col("cvec"), col("cvec"))))).as("c"))
-    scored
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("vec_id").orderBy(col("c").desc, col("c_label"))))
-      .filter(col("rn") === 1)
-      .select(col("vec_id"), col("label"), col("c_label").as("new_label"),
-        round(col("c"), 4).as("sim"))
+    KMeans.assign(labeled(emb).withColumnRenamed("cluster", "label"),
+        labelCentroids(emb), Seq("vec_id"))
+      .select(col("vec_id"), col("label"), col("cluster").as("new_label"),
+        round(col("sim"), 4).as("sim"))
       .orderBy("vec_id")
   }
 
@@ -531,15 +522,15 @@ object VectorQueries {
       .orderBy("vec_id", "rank")
   }
 
-  /** The multi-iteration Lloyd loop ([[graft.query.KMeans.run]]) under
-    * the gate: 2 rounds from the label seed — the oracle is the same
-    * computation unrolled as a DuckDB CTE, so the ITERATIVE code path
-    * (persist-once corpus, per-round broadcast centroids,
-    * localCheckpoint lineage cuts) is hash-checked, not just its
-    * single-step twin `q_kmeans_step`. */
+  /** The multi-iteration Lloyd loop ([[KMeans.run]]) under the gate:
+    * 2 rounds from the label seed — the oracle is the same computation
+    * unrolled as a DuckDB CTE, so the ITERATIVE code path (points
+    * stored once, per-round broadcast centroids, per-round centroid
+    * cuts) is hash-checked, not just its single-step twin
+    * `q_kmeans_step`. */
   private def kmeansRun(s: SparkSession, d: String): DataFrame =
-    graft.query.KMeans.run(s, Tables.embeddings(s, d),
-        "vec_id", "embedding", "label", iters = 2)
+    KMeans.run(Tables.embeddings(s, d), "vec_id", "embedding", "label",
+        iters = 2)
       .orderBy("vec_id")
 
   private val kmeansRunSql =
@@ -629,47 +620,21 @@ object VectorQueries {
     * subspaces of 8 dims; each subvector encodes to its nearest
     * sub-codebook entry, so a vector stores as 8 small codes (64×
     * smaller than float32 at code-book size 256). Codebook here: the
-    * per-label sub-centroids (the same deterministic coarse quantizer
-    * the IVF/k-means rows use — training a real codebook is
-    * [[graft.query.KMeans.run]] per subspace). Output: one row per
+    * per-label centroids ([[labelCentroids]], the same deterministic
+    * coarse quantizer the IVF/k-means rows use) sliced per subspace —
+    * training a real codebook is [[pqTrain]]. Output: one row per
     * (vector, subspace) with the chosen code and the residual
     * distance — the values an ADC (asymmetric distance) search reads.
     *
-    * Scale shape: the codebook (k×dim doubles) broadcasts; per-row
-    * work is scan-stage `slice`/`zip_with` arithmetic; the argmin is
-    * a `min(struct(d2, label))` hash aggregate over (vec_id, sub) —
+    * Scale shape: the codebook (k×dim doubles) broadcasts into an
+    * equi-join on `sub`; the argmin is [[KMeans.assign]]'s L2 form, a
+    * `min(struct(d2, code))` hash aggregate over (vec_id, sub) —
     * map-side partial, k-row groups, never a per-key window sort. */
-  /** The per-label sub-codebook: (c_label, cvec) — full-dim centroid
-    * arrays sliced per subspace at use sites. */
-  private def pqCodebook(emb: DataFrame): DataFrame = emb
-    .select(col("label").as("c_label"), posexplode(asDouble(col("embedding"))))
-    .groupBy("c_label", "pos").agg(avg("col").as("m"))
-    .groupBy("c_label")
-    .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("cs"))
-    .select(col("c_label"), transform(col("cs"), x => x.getField("m")).as("cvec"))
-
-  /** Per-(vector, subspace) code assignment: (vec_id, sub, code, d2)
-    * — argmin residual via `min(struct(d2, label))`, never a window. */
-  private def pqCodes(emb: DataFrame, cb: DataFrame): DataFrame = {
-    VectorFunctions.register(emb.sparkSession)
-    emb
-    .select(col("vec_id"), asDouble(col("embedding")).as("e"))
-    .crossJoin(broadcast(cb))
-    .select(col("vec_id"), col("c_label"), col("e"), col("cvec"),
-      explode(sequence(lit(0), lit(7))).as("sub"))
-    .withColumn("d2", sqd(expr("slice(e, sub * 8 + 1, 8)"),
-      expr("slice(cvec, sub * 8 + 1, 8)")))
-    .groupBy("vec_id", "sub")
-    .agg(min(struct(col("d2"), col("c_label"))).as("best"))
-    .select(col("vec_id"), col("sub"),
-      col("best.c_label").as("code"), col("best.d2").as("d2"))
-  }
-
   private def pqEncode(s: SparkSession, d: String): DataFrame = {
     val emb = Tables.embeddings(s, d)
-    pqCodes(emb, pqCodebook(emb))
+    pqAssign(subvectors(emb), sliced(labelCentroids(emb)))
       .select(col("vec_id"), col("sub").cast("int").as("sub"),
-        col("code").cast("int").as("code"),
+        col("cluster").cast("int").as("code"),
         round(sqrt(col("d2")), 4).as("sub_dist"))
       .orderBy("vec_id", "sub")
   }
@@ -691,14 +656,12 @@ object VectorQueries {
     // (code assignment + ADC lookup), and without the cut each would
     // re-run the full corpus posexplode + aggregation lineage — the
     // q_semantic_dedup double-compute this round removed elsewhere
-    val cb = pqCodebook(emb).localCheckpoint()
-    val q = emb.filter(col("vec_id") === 0)
-      .select(asDouble(col("embedding")).as("qe"))
-    pqCodes(emb, cb)
-      .join(broadcast(cb.withColumnRenamed("c_label", "code")), "code")
+    val cb = sliced(labelCentroids(emb)).localCheckpoint()
+    val q = query0(emb)
+    pqAssign(subvectors(emb), cb)
+      .join(broadcast(cb), Seq("sub", "cluster"))
       .crossJoin(broadcast(q))
-      .withColumn("qd2", sqd(expr("slice(qe, sub * 8 + 1, 8)"),
-        expr("slice(cvec, sub * 8 + 1, 8)")))
+      .withColumn("qd2", sqd(expr("slice(qe, sub * 8 + 1, 8)"), col("cvec")))
       .groupBy("vec_id").agg(sum("qd2").as("adc"))
       .filter(col("vec_id") =!= 0)
       .select(col("vec_id"), round(sqrt(col("adc")), 4).as("adc_dist"))
@@ -706,58 +669,38 @@ object VectorQueries {
       .limit(5)
   }
 
-  /** TRAINED per-subspace PQ codebooks — Lloyd iterations under L2
-    * (the PQ norm, Jégou et al. 2011 §II: one independent k-means per
-    * subspace), replacing the per-label-mean stand-in [[pqCodebook]]
-    * uses: k codewords per 8-dim subspace, seeded deterministically
-    * (code = vec_id mod k) so the gate row and its unrolled DuckDB
-    * oracle run the identical computation. Returns
-    * (codebook (sub, c_code, cvec — 8-dim), codes (vec_id, sub, code,
-    * d2)) with the codes assigned against the LAST round's centroids.
-    *
-    * Scale shape per round: the subvector table is materialized once
-    * (localCheckpoint — at cluster scale a reliable checkpoint, same
-    * boundary as [[graft.query.KMeans.run]]); centroids are a
-    * partial-aggregating posexplode groupBy emitting 8·k·8 doubles;
-    * assignment is an equi-join on `sub` against the BROADCAST
-    * codebook with the argmin a `min(struct(d2, code))` hash aggregate
-    * — map-side partial, k-row groups, never a per-key window sort. */
+  /** TRAINED per-subspace PQ codebooks — L2 Lloyd rounds
+    * ([[KMeans.train]] with `part = sub`: one independent k-means per
+    * subspace, Jégou et al. 2011 §II), replacing the per-label-mean
+    * stand-in [[pqEncode]] uses: k codewords per 8-dim subspace,
+    * seeded deterministically (code = vec_id mod k) so the gate row
+    * and its unrolled DuckDB oracle run the identical computation.
+    * Returns (codebook (sub, c_code, cvec — 8-dim), codes (vec_id,
+    * sub, code, d2)) with the codes assigned against the LAST round's
+    * centroids. */
   private[graft] def pqTrain(emb: DataFrame, k: Int, iters: Int,
       vecCol: String = "embedding", nSub: Int = 8, subDim: Int = 8)
       : (DataFrame, DataFrame) = {
-    VectorFunctions.register(emb.sparkSession)
-    val pts = emb
-      .select(col("vec_id"), asDouble(col(vecCol)).as("e"))
-      .select(col("vec_id"),
-        explode(sequence(lit(0), lit(nSub - 1))).as("sub"), col("e"))
-      .select(col("vec_id"), col("sub"),
-        expr(s"slice(e, sub * $subDim + 1, $subDim)").as("sv"))
-      .localCheckpoint()
-    def centOf(asg: DataFrame): DataFrame = pts
-      .join(asg.select("vec_id", "sub", "code"), Seq("vec_id", "sub"))
-      .select(col("sub"), col("code"), posexplode(col("sv")))
-      .groupBy("sub", "code", "pos").agg(avg("col").as("m"))
-      .groupBy("sub", "code")
-      .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("cs"))
-      .select(col("sub"), col("code").as("c_code"),
-        transform(col("cs"), x => x.getField("m")).as("cvec"))
-    def assignTo(cent: DataFrame): DataFrame = pts
-      .join(broadcast(cent), Seq("sub"))
-      .withColumn("d2", sqd(col("sv"), col("cvec")))
-      .groupBy("vec_id", "sub")
-      .agg(min(struct(col("d2"), col("c_code"))).as("best"))
-      .select(col("vec_id"), col("sub"),
-        col("best.c_code").as("code"), col("best.d2").as("d2"))
-    val seed = pts.select(col("vec_id"), col("sub"),
-      (col("vec_id") % k).cast("int").as("code"))
-    var cent = centOf(seed).localCheckpoint()
-    var asg = assignTo(cent)
-    for (_ <- 2 to iters) {
-      cent = centOf(asg).localCheckpoint()
-      asg = assignTo(cent)
-    }
-    (cent, asg)
+    val (cent, codes) = KMeans.train(pqSeeded(emb, k, vecCol, nSub, subDim),
+      Seq("vec_id", "sub"), "seed", iters, KMeans.L2, vecCol = "sv",
+      part = Seq("sub"))
+    (cent.withColumnRenamed("cluster", "c_code"),
+      codes.withColumnRenamed("cluster", "code"))
   }
+
+  /** [[pqTrain]]'s codebook alone ([[KMeans.fit]]). */
+  private[graft] def pqCodebook(emb: DataFrame, k: Int, iters: Int,
+      vecCol: String = "embedding", nSub: Int = 8, subDim: Int = 8)
+      : DataFrame =
+    KMeans.fit(pqSeeded(emb, k, vecCol, nSub, subDim),
+        Seq("vec_id", "sub"), "seed", iters, KMeans.L2, vecCol = "sv",
+        part = Seq("sub"))
+      .withColumnRenamed("cluster", "c_code")
+
+  private def pqSeeded(emb: DataFrame, k: Int, vecCol: String, nSub: Int,
+      subDim: Int): DataFrame =
+    subvectors(emb, vecCol, nSub, subDim)
+      .withColumn("seed", (col("vec_id") % k).cast("int"))
 
   /** ADC top-k against a TRAINED codebook ([[pqTrain]]'s output): the
     * per-(sub, code) query-to-codeword distance table is 8·k values
@@ -808,13 +751,12 @@ object VectorQueries {
   private[graft] def ivfPqSearchOn(s: SparkSession, emb: DataFrame,
       nProbe: Int = 2, pqK: Int = 4, topK: Int = 5): DataFrame = {
     VectorFunctions.register(s)
-    val q = emb.filter(col("vec_id") === 0)
-      .select(asDouble(col("embedding")).as("qe"))
+    val q = query0(emb)
     // ONE driver-side row — the user-supplied query vector
     val qArr = q.head.getSeq[Double](0).toArray
     val (centC, asgC) = trainedCoarse(s, emb)
     val candIds = asgC
-      .join(broadcast(trainedProbe(centC, q, nProbe)), "cluster")
+      .join(broadcast(probe(centC, q, nProbe, tieDecimals = 9)), "cluster")
       .select("vec_id")
     val (centT, codes) = pqTrain(emb, k = pqK, iters = 2)
     adcDistances(
@@ -878,8 +820,7 @@ object VectorQueries {
   private[graft] def ivfPqResidualOn(s: SparkSession, emb: DataFrame,
       nProbe: Int = 2, pqK: Int = 4, topK: Int = 5): DataFrame = {
     VectorFunctions.register(s)
-    val q = emb.filter(col("vec_id") === 0)
-      .select(asDouble(col("embedding")).as("qe"))
+    val q = query0(emb)
     val qArr = q.head.getSeq[Double](0).toArray
     val (centC, asgC) = trainedCoarse(s, emb)
     // residuals: x − centroid(assigned cell)
@@ -888,7 +829,7 @@ object VectorQueries {
         expr("zip_with(e, cvec, (a, b) -> a - b)").as("embedding"))
       .localCheckpoint()
     val (centT, codes) = pqTrain(resid, k = pqK, iters = 2)
-    val probed = trainedProbe(centC, q, nProbe)
+    val probed = probe(centC, q, nProbe, tieDecimals = 9)
     // per-cell query residual (nProbe rows), then the nProbe·8·k
     // lookup table against the broadcast sub-codebooks
     val qres = probed.join(centC, Seq("cluster"))
@@ -981,14 +922,13 @@ object VectorQueries {
     "ORDER BY vec_id, sub"
 
   /** Per-label centroid L2 norm (the IVF coarse-quantizer statistic). */
-  private def centroidNorm(s: SparkSession, d: String): DataFrame =
-    Tables.embeddings(s, d)
-      .select(col("label"), posexplode(asDouble(col("embedding"))))
-      .groupBy("label", "pos")
-      .agg(avg("col").as("m"))
-      .groupBy("label")
-      .agg(round(sqrt(sum(col("m") * col("m"))), 4).as("centroid_norm"))
+  private def centroidNorm(s: SparkSession, d: String): DataFrame = {
+    VectorFunctions.register(s)
+    labelCentroids(Tables.embeddings(s, d))
+      .select(col("cluster").as("label"),
+        round(sqrt(dot(col("cvec"), col("cvec"))), 4).as("centroid_norm"))
       .orderBy("label")
+  }
 
   /** Vector norms — scan-side feature extraction over the array column. */
   private def vectorNorms(s: SparkSession, d: String): DataFrame = {

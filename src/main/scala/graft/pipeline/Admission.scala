@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.dedup.Dedup
+import graft.query.KMeans
 import graft.sources.Parquet
 
 /** Daily-crawl admission loop — the composed incremental form of the
@@ -681,28 +682,23 @@ object Admission {
     fsOf(s, root).exists(new Path(s"${pqcbPath(root)}/_SUCCESS"))
 
   /** Encode (id, e, n) rows against codebook `cb` (sub, c_code, cvec):
-    * per subspace argmin-assign (`min(struct(d2, code))` — a hash
-    * aggregate, the [[graft.operators.VectorQueries.pqTrain]] shape),
-    * pack the nSub 8-bit codes into ONE BIGINT lane-wise, and carry
-    * the exact reconstruction error r = ‖x − x̂‖ (the per-doc bound
+    * per subspace L2 argmin ([[graft.query.KMeans.assign]]), pack the
+    * nSub 8-bit codes into ONE BIGINT lane-wise, and carry the exact
+    * reconstruction error r = ‖x − x̂‖ (the per-doc bound
     * [[adcPrefilter]]'s pruning guarantee is built from). */
   private[graft] def pqEncodeVecs(incVecs: DataFrame, cb: DataFrame,
       idCol: String, nSub: Int, subDim: Int): DataFrame =
-    incVecs
-      .select(col(idCol), col("n"),
-        explode(sequence(lit(0), lit(nSub - 1))).as("sub"), col("e"))
-      .withColumn("sv", expr(s"slice(e, sub * $subDim + 1, $subDim)"))
-      .join(broadcast(cb), Seq("sub"))
-      // codegen'd squared L2 — bit-identical to the zip_with fold it
-      // replaces ([[graft.functions.VecSqDist]])
-      .withColumn("d2", graft.functions.VectorFunctions
-        .vecSqDist(col("sv"), col("cvec")))
-      .groupBy(col(idCol), col("n"), col("sub"))
-      .agg(min(struct(col("d2"), col("c_code"))).as("best"))
+    KMeans.assign(
+        incVecs
+          .select(col(idCol), col("n"),
+            explode(sequence(lit(0), lit(nSub - 1))).as("sub"), col("e"))
+          .withColumn("sv", expr(s"slice(e, sub * $subDim + 1, $subDim)")),
+        cb.withColumnRenamed("c_code", "cluster"), Seq(idCol, "n", "sub"),
+        KMeans.L2, vecCol = "sv", part = Seq("sub"))
       .groupBy(col(idCol), col("n"))
-      .agg(sum(expr("shiftleft(cast(best.c_code as bigint), 8 * sub)"))
+      .agg(sum(expr("shiftleft(cast(cluster as bigint), 8 * sub)"))
           .as("code"),
-        sqrt(sum(col("best.d2"))).as("r"))
+        sqrt(sum(col("d2"))).as("r"))
       .select(col(idCol), col("code"), col("n"), col("r"))
 
   /** ADC pre-filter over candidate (inc, seen) pairs — the stage that
@@ -876,14 +872,10 @@ object Admission {
             .localCheckpoint(), false)
           else if (!incHasVecs)
             (s.createDataFrame(s.sparkContext.emptyRDD[Row], cbSchema), false)
-          else {
-            val (cent, _) = graft.operators.VectorQueries.pqTrain(
+          else // (sub int, c_code int, cvec), already cut
+            (graft.operators.VectorQueries.pqCodebook(
               incVecs.select(col(idCol).as("vec_id"), col("e").as("embedding")),
-              k = pqK, iters = 2, nSub = nSub, subDim = subDim)
-            (cent.select(col("sub").cast("int").as("sub"),
-                col("c_code").cast("int").as("c_code"), col("cvec"))
-              .localCheckpoint(), true)
-          }
+              k = pqK, iters = 2, nSub = nSub, subDim = subDim), true)
         (incVecs, incSem, incHasVecs, cb, cbNew)
       }: (DataFrame, DataFrame, Boolean, DataFrame, Boolean))
     val textAdmitted = admittedIdsOf(incIndex, freshKeys)

@@ -18,11 +18,10 @@ import org.apache.spark.storage.StorageLevel
   * replays from storage instead of killing the job — the knob a
   * 1000-executor 100 TB run turns on, because at that scale executor
   * loss is an expectation, not an anomaly. Honest cost accounting:
-  * the cut frame is written and re-read once per iteration, and while
-  * BFS/CC cut narrow frontier/label tables, KMeans cuts its full
-  * (id, cluster, sim) assignment table — row-count-sized, so the
-  * durable option there trades one narrow table write per round for
-  * fault tolerance. The frame is persisted for the duration of the
+  * the cut frame is written and re-read once per iteration: BFS/CC
+  * cut narrow frontier/label tables, KMeans its k-row centroid table
+  * per round plus its final assignment once. KMeans takes the dir from
+  * the session conf ([[dirFromConf]]), not a parameter. The frame is persisted for the duration of the
   * cut so Spark's checkpoint job re-reads the cache instead of
   * recomputing the plan a second time (the default `checkpoint()`
   * behavior without a persist).

@@ -27,7 +27,7 @@ class AdmissionCompactSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   private def freshRoot() =
-    Files.createTempDirectory("graft_adm_compact").toString + "/state"
+    tempDir("graft_adm_compact").toString + "/state"
 
   private def ids(df: org.apache.spark.sql.DataFrame): Seq[Long] =
     df.select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
@@ -402,7 +402,7 @@ class AdmissionCompactSpec extends SparkSpec {
 
   test("two roots whose sanitized names collide keep independent state") {
     import spark.implicits._
-    val parent = Files.createTempDirectory("graft_adm_names").toString
+    val parent = tempDir("graft_adm_names").toString
     // sanitization maps both to ..._a_b — only the root hash separates them
     val rootA = s"$parent/a-b"
     val rootB = s"$parent/a_b"
@@ -426,10 +426,10 @@ class AdmissionCompactSpec extends SparkSpec {
     val docs = Tables.documents(spark, dir)
     val mx = docs.agg(max("doc_id")).head.getLong(0)
     val (t1, t2) = (mx / 3, 2 * mx / 3)
-    val srcDir = Files.createTempDirectory("graft_admc_src")
+    val srcDir = tempDir("graft_admc_src")
     val t0 = System.currentTimeMillis() - 60000
     def writeOne(df: org.apache.spark.sql.DataFrame, name: String, t: Long): Unit = {
-      val tmp = Files.createTempDirectory("graft_admc_one").toString
+      val tmp = tempDir("graft_admc_one").toString
       df.coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = new java.io.File(tmp).listFiles()
         .find(_.getName.endsWith(".parquet")).get
@@ -444,7 +444,7 @@ class AdmissionCompactSpec extends SparkSpec {
       "01_b.parquet", t0 + 10000)
     writeOne(docs.filter(col("doc_id") > t2), "02_c.parquet", t0 + 20000)
     val root = freshRoot()
-    val ckpt = Files.createTempDirectory("graft_admc_ck").toString
+    val ckpt = tempDir("graft_admc_ck").toString
     val q = Admission.admitStream(
       spark.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", "1").parquet(srcDir.toString),

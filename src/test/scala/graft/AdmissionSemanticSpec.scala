@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import graft.pipeline.Admission
@@ -22,7 +21,7 @@ class AdmissionSemanticSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   private def freshRoot() =
-    Files.createTempDirectory("graft_adm_sem").toString + "/state"
+    tempDir("graft_adm_sem").toString + "/state"
 
   private def ids(df: org.apache.spark.sql.DataFrame): Seq[Long] =
     df.select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
@@ -124,7 +123,7 @@ class AdmissionSemanticSpec extends SparkSpec {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val root = freshRoot()
-    val ckpt = Files.createTempDirectory("graft_adm_sem_ck").toString
+    val ckpt = tempDir("graft_adm_sem_ck").toString
     // static id -> embedding lookup: doc 2 duplicates doc 1's vector
     // with fresh text, doc 3 is orthogonal
     val emb = toyEmb(1L -> Seq(1.0, 0.5, 0.0, 0.0),

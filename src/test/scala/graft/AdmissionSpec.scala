@@ -15,7 +15,7 @@ class AdmissionSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   private def freshRoot() =
-    Files.createTempDirectory("graft_admission").toString + "/state"
+    tempDir("graft_admission").toString + "/state"
 
   test("two sequential increments admit exactly the one-shot set (real corpus)") {
     val docs = Tables.documents(spark, dir)
@@ -80,7 +80,7 @@ class AdmissionSpec extends SparkSpec {
     * the file-source processes increments in id order. */
   private def writeOneFile(df: org.apache.spark.sql.DataFrame,
       dest: java.nio.file.Path, t: Long): Unit = {
-    val tmp = Files.createTempDirectory("graft_adm_one").toString
+    val tmp = tempDir("graft_adm_one").toString
     df.coalesce(1).write.mode("overwrite").parquet(tmp)
     val part = new java.io.File(tmp).listFiles()
       .find(_.getName.endsWith(".parquet")).get
@@ -94,14 +94,14 @@ class AdmissionSpec extends SparkSpec {
       "exactly-once across restart") {
     val docs = Tables.documents(spark, dir)
     val split = docs.agg(max("doc_id")).head.getLong(0) / 2
-    val srcDir = Files.createTempDirectory("graft_adm_src")
+    val srcDir = tempDir("graft_adm_src")
     val t0 = System.currentTimeMillis() - 60000
     writeOneFile(docs.filter(col("doc_id") <= split),
       srcDir.resolve("00_low.parquet"), t0)
     writeOneFile(docs.filter(col("doc_id") > split),
       srcDir.resolve("01_high.parquet"), t0 + 10000)
     val root = freshRoot()
-    val ckpt = Files.createTempDirectory("graft_adm_ck").toString
+    val ckpt = tempDir("graft_adm_ck").toString
     def run(): Unit = {
       val q = Admission.admitStream(
         spark.readStream.schema(docs.schema)

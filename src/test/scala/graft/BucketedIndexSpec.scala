@@ -17,7 +17,7 @@ class BucketedIndexSpec extends SparkSpec {
     val docs = Tables.documents(spark, dir)
     val corpus = docs.filter(col("doc_id") % 5 =!= 0)
     val inc = docs.filter(col("doc_id") % 5 === 0)
-    val base = java.nio.file.Files.createTempDirectory("graft_bidx").toString
+    val base = tempDir("graft_bidx").toString
     Bucketing.writeBucketed(
       Dedup.lshIndex(corpus, "doc_id", "text"),
       "graft_bidx_t", "band", buckets = 8, path = s"$base/idx",

@@ -9,7 +9,7 @@ class BucketingSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   test("bucketed fact-fact join runs shuffle-free and row-correct") {
-    val base = java.nio.file.Files.createTempDirectory("buckets").toString
+    val base = tempDir("buckets").toString
     Bucketing.writeBucketed(Tables.orders(spark, dir)
       .select("o_orderkey", "o_custkey", "o_totalprice"),
       "graft_orders_b", "o_orderkey", 8, s"$base/orders")

@@ -87,7 +87,7 @@ class CacheHygieneSpec extends SparkSpec {
 
   test("KMeans.run releases the corpus cache") {
     assertNoResidue("KMeans.run") {
-      KMeans.run(spark, vecs.withColumn("seed", (col("id") % 3).cast("int")),
+      KMeans.run(vecs.withColumn("seed", (col("id") % 3).cast("int")),
         "id", "emb", "seed", iters = 2).count()
     }
   }

@@ -14,7 +14,7 @@ class CommittedTableSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshRoot() =
-    Files.createTempDirectory("graft_ct").toString + "/tbl"
+    tempDir("graft_ct").toString + "/tbl"
 
   private def rows(root: String): Seq[Long] =
     CommittedTable.read(spark, root).select("v")

@@ -50,9 +50,9 @@ class CurationStreamSpec extends SparkSpec {
 
   test("partitioned sink: Curation.write layout, exactly-once restart") {
     import spark.implicits._
-    val srcDir = java.nio.file.Files.createTempDirectory("cur-src").toString
-    val outDir = java.nio.file.Files.createTempDirectory("cur-out").toString + "/t"
-    val ckpt = java.nio.file.Files.createTempDirectory("cur-ck").toString
+    val srcDir = tempDir("cur-src").toString
+    val outDir = tempDir("cur-out").toString + "/t"
+    val ckpt = tempDir("cur-ck").toString
     val docs = Seq(
       CurDoc(1L, "src0", enText("alpha")), CurDoc(2L, "src1", enText("beta")),
       CurDoc(3L, "src1", enText("alpha"))).toDF() // 3 duplicates 1

@@ -91,7 +91,7 @@ class DedupSpec extends SparkSpec {
     val inc = docs.filter(col("doc_id") % 5 === 0)
     val corpus = docs.filter(col("doc_id") % 5 =!= 0)
     // the index survives a parquet roundtrip — the persisted-table path
-    val idxDir = java.nio.file.Files.createTempDirectory("lsh-idx").toString
+    val idxDir = tempDir("lsh-idx").toString
     Dedup.lshIndex(corpus, "doc_id", "text").write
       .mode("overwrite").parquet(idxDir)
     val viaIndex = Dedup.incrementalLsh(inc, "doc_id", "text",

@@ -1,9 +1,8 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
 import graft.output.Dot
 
-class DotSpec extends AnyFunSuite {
+class DotSpec extends SparkSpec {
   test("F4: sanitize uses the reference's exact class (0 is excluded)") {
     assert(Dot.sanitizeId("Lionel Barrymore") == "Lionel_Barrymore")
     assert(Dot.sanitizeId("Movie 2000!") == "Movie_2____")  // 2 kept, 0s + ! replaced
@@ -18,7 +17,7 @@ class DotSpec extends AnyFunSuite {
 
   test("renderPng produces a PNG when dot exists, None otherwise") {
     val dot = Dot.render("A", Seq(("A", "B")), actors = false)
-    val out = java.nio.file.Files.createTempDirectory("graft-png")
+    val out = tempDir("graft-png")
       .resolve("g.png").toString
     Dot.renderPng(dot, out) match {
       case Some(path) =>

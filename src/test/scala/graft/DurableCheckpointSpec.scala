@@ -3,19 +3,20 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.query.{BipartiteExpand, ConnectedComponents, KMeans}
 
-/** The durable-checkpoint knob ([[graft.query.Checkpoints]]): every
-  * iterative loop accepts `checkpointDir`, switching its per-iteration
-  * lineage cut from `localCheckpoint` (executor-local blocks — lost
-  * with the executor) to a reliable `checkpoint()` into storage, the
-  * trade a long 100 TB run makes so executor loss replays instead of
-  * failing the job. Results must be IDENTICAL either way; the spec
+/** The durable-checkpoint knob ([[graft.query.Checkpoints]]): BFS, CC
+  * and dedup accept `checkpointDir`, k-means and the operator-internal
+  * cuts read `spark.graft.checkpointDir`; either switches the
+  * per-iteration lineage cut from `localCheckpoint` (executor-local
+  * blocks — lost with the executor) to a reliable `checkpoint()` into
+  * storage, the trade a long 100 TB run makes so executor loss
+  * replays instead of failing the job. Results must be IDENTICAL either way; the spec
   * also proves the reliable path really wrote checkpoint data (the
   * knob isn't silently ignored).
   */
 class DurableCheckpointSpec extends SparkSpec {
 
   private def freshDir(tag: String): java.nio.file.Path =
-    java.nio.file.Files.createTempDirectory(s"graft-ckpt-$tag")
+    tempDir(s"graft-ckpt-$tag")
 
   private def checkpointFiles(dir: java.nio.file.Path): Long = {
     val s = java.nio.file.Files.walk(dir)
@@ -93,13 +94,13 @@ class DurableCheckpointSpec extends SparkSpec {
       (i, Array.tabulate(6)(d => math.cos(i / 10 * 13 + d * 5) + 0.01 * i).toSeq,
         (i % 3).toInt)
     }.toDF("id", "emb", "seed")
-    val local = KMeans.run(spark, vecs, "id", "emb", "seed", iters = 3)
+    def run() = KMeans.run(vecs, "id", "emb", "seed", iters = 3)
       .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
+    val local = run()
+    // k-means has no checkpoint parameter: its per-round cuts follow
+    // the session conf, like every operator-internal cut
     val dir = freshDir("km")
-    val durable = KMeans
-      .run(spark, vecs, "id", "emb", "seed", iters = 3,
-        checkpointDir = Some(dir.toString))
-      .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
+    val durable = withConf("spark.graft.checkpointDir", dir.toString)(run())
     assert(durable == local)
     assert(checkpointFiles(dir) > 0, "reliable checkpoint wrote nothing")
   }

@@ -54,13 +54,13 @@ class ImdbIngestSpec extends SparkSpec {
     val e = EdgeBuilder.edges(spark,
       s"$dir/basic1000.tsv", s"$dir/principals1000.tsv", s"$dir/names1000.tsv")
     val grouped = EdgeBuilder.titleToCast(e)
-    val tsvDir = java.nio.file.Files.createTempDirectory("tsvsink").toString
+    val tsvDir = tempDir("tsvsink").toString
     ImdbTsv.writeGroupedTsv(grouped, "title", "cast", tsvDir)
     // the reference's `key \t v1, v2` shape (tab2file, server.erl:379-389)
     val line = spark.read.option("sep", "\t").csv(tsvDir).collect()(0)
     assert(line.length == 2 && line.getString(0).nonEmpty)
 
-    val snapDir = java.nio.file.Files.createTempDirectory("snap").toString + "/edges"
+    val snapDir = tempDir("snap").toString + "/edges"
     ImdbTsv.snapshot(e, snapDir)
     val back = ImdbTsv.readSnapshot(spark, snapDir)
       .collect().map(r => (r.getString(0), r.getString(1))).toSet
@@ -68,7 +68,7 @@ class ImdbIngestSpec extends SparkSpec {
   }
 
   test("partitioned snapshot prunes partitions at planning time") {
-    val dir2 = java.nio.file.Files.createTempDirectory("psnap").toString + "/events"
+    val dir2 = tempDir("psnap").toString + "/events"
     val ev = graft.sources.Tables.events(spark, "/root/testdata/sf0.001")
       .withColumn("day", to_date(col("ts")))
     ImdbTsv.snapshotPartitioned(ev, "day", dir2)

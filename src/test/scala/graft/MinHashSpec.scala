@@ -64,7 +64,7 @@ class MinHashSpec extends SparkSpec {
 
   test("each row is tokenized once: no inferred filter re-derives the shingles") {
     // a file scan: inline rows would be folded into a local relation
-    val path = java.nio.file.Files.createTempDirectory("graft_minhash").toString + "/docs"
+    val path = tempDir("graft_minhash").toString + "/docs"
     docs.write.parquet(path)
     val scan = graft.sources.Parquet.read(spark, path)
     for (df <- Seq(TextFunctions.minhashRows(scan, "doc_id", "text"),

@@ -44,7 +44,7 @@ class PipelineSinkSpec extends SparkSpec {
 
   test("write -> read-back roundtrip is lossless") {
     val packed = Curation.run(Tables.documents(spark, "/root/testdata/sf0.001"))
-    val dir = Files.createTempDirectory("graft_sink_rt").toString
+    val dir = tempDir("graft_sink_rt").toString
     Curation.write(packed, dir)
     val back = spark.read.parquet(dir)
       .select("source", "bin", "doc_id", "chunk_id", "n_tokens", "chunk_md5")
@@ -116,8 +116,8 @@ class PipelineSinkSpec extends SparkSpec {
 
   test("two writes of the same input produce byte-identical files") {
     val packed = Curation.run(Tables.documents(spark, "/root/testdata/sf0.001"))
-    val d1 = Files.createTempDirectory("graft_sink_a")
-    val d2 = Files.createTempDirectory("graft_sink_b")
+    val d1 = tempDir("graft_sink_a")
+    val d2 = tempDir("graft_sink_b")
     Curation.write(packed, d1.toString)
     Curation.write(packed, d2.toString)
     val h1 = digests(d1)
@@ -125,5 +125,34 @@ class PipelineSinkSpec extends SparkSpec {
     assert(h1.nonEmpty, "expected source= partition directories")
     assert(h1 == h2,
       s"writes must be byte-deterministic:\n  first=$h1\n  second=$h2")
+  }
+
+  test("each per-run maintenance root is registered for delete on exit") {
+    import graft.operators.PipelineQueries
+    import spark.implicits._
+    // an inline events table: the roots are under test, not the answers
+    val sfDir = s"${tempDir("graft_runroot")}/sf_inline"
+    (0L until 200L).map { i =>
+      (i, i % 7, if (i % 2 == 0) "click" else "view",
+        new java.sql.Timestamp(1705276800000L + i * 3600000L), i * 0.5)
+    }.toDF("event_id", "user_id", "event_type", "ts", "value")
+      .write.parquet(s"$sfDir/events.parquet")
+    Seq("q_partition_prune" -> PipelineQueries.pruneRoot,
+      "q_compact_files" -> PipelineQueries.compactRoot,
+      "q_forget_user" -> PipelineQueries.forgetRoot,
+      "q_table_time_travel" -> PipelineQueries.ttravelRoot).foreach {
+      case (name, base) =>
+        val root = new org.apache.hadoop.fs.Path(
+          s"$base/sf_inline/${spark.sparkContext.applicationId}")
+        val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        // an earlier row of this JVM may have registered the root: start
+        // unregistered so only this run of the row can register it
+        fs.cancelDeleteOnExit(root)
+        Catalog.byName(name).fn(spark, sfDir).collect()
+        assert(fs.exists(root), s"$name wrote no root at $root")
+        // true only for a registered path
+        assert(fs.cancelDeleteOnExit(root), s"$name left $root unregistered")
+        fs.deleteOnExit(root)
+    }
   }
 }

@@ -159,8 +159,7 @@ class RuleBatterySpec extends SparkSpec {
       (5L, "control  chars"),
       (6L, ""))
     val df = nasty.toDF("doc_id", "text")
-    val dest = java.nio.file.Files
-      .createTempDirectory("graft_jsonl_spec").toString
+    val dest = tempDir("graft_jsonl_spec").toString
     df.write.mode("overwrite").json(dest)
     val back = spark.read.schema(df.schema).json(dest)
     assert(back.count() === nasty.length)

@@ -60,7 +60,7 @@ class SemanticDedupSpec extends SparkSpec {
     // brute force: per cluster, kept(v) iff no smaller-id member with
     // cosine >= threshold
     val asg = KMeans.assign(
-      planted().select(col("vec_id"), col("e")), centroids(), "vec_id")
+      planted().select(col("vec_id"), col("e")), centroids(), Seq("vec_id"))
       .select("vec_id", "e", "cluster")
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray, r.getInt(2)))

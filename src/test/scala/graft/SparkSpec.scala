@@ -1,14 +1,32 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM-wide session via
   * getOrCreate; Test/fork=true gives the suite its own JVM). */
-trait SparkSpec extends AnyFunSuite {
+trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   def resource(name: String): String =
     getClass.getResource(s"/$name").getPath
+
+  private val tempDirs =
+    scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
+
+  /** A fresh directory under the system temp dir, deleted with its
+    * contents after the suite's last test. */
+  def tempDir(prefix: String): java.nio.file.Path = {
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    tempDirs.synchronized(tempDirs += d)
+    d
+  }
+
+  override def afterAll(): Unit =
+    try tempDirs.synchronized {
+      tempDirs.foreach(d => org.apache.commons.io.FileUtils.deleteQuietly(d.toFile))
+      tempDirs.clear()
+    } finally super.afterAll()
 
   /** Run `body` with session conf `key` set to `value`, then restore
     * the previous setting: the session is shared by every suite in the

@@ -25,7 +25,7 @@ class StreamingSpec extends SparkSpec {
   test("multi-micro-batch stream converges to the same result") {
     withConf("spark.sql.legacy.parquet.nanosAsLong", "true") {
       // split events into 4 files -> maxFilesPerTrigger=1 gives 4 batches
-      val splitDir = java.nio.file.Files.createTempDirectory("evsplit").toString
+      val splitDir = tempDir("evsplit").toString
       spark.read.parquet(s"$dir/events.parquet")
         .repartition(4).write.mode("overwrite").parquet(splitDir)
       val stream = EventStreams.hourlyCounts(
@@ -46,7 +46,7 @@ class StreamingSpec extends SparkSpec {
   test("dropDuplicatesWithinWatermark dedups repeats across micro-batches") {
     withConf("spark.sql.legacy.parquet.nanosAsLong", "true") {
       // two files with the SAME events -> every id arrives twice
-      val dupDir = java.nio.file.Files.createTempDirectory("evdup").toString
+      val dupDir = tempDir("evdup").toString
       val once = spark.read.parquet(s"$dir/events.parquet")
       once.coalesce(1).write.mode("overwrite").parquet(dupDir)
       once.coalesce(1).write.mode("append").parquet(dupDir)
@@ -101,9 +101,9 @@ class StreamingSpec extends SparkSpec {
       "null rows exactly once on watermark eviction, survive a mid-run " +
       "restart, and match the batch q_click_purchase_outer") {
     import spark.implicits._
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_cpo_src")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_cpo_ck").toString
-    val outDir = java.nio.file.Files.createTempDirectory("graft_cpo_out").toString
+    val srcDir = tempDir("graft_cpo_src")
+    val ckpt = tempDir("graft_cpo_ck").toString
+    val outDir = tempDir("graft_cpo_out").toString
     // event-time-ordered replay in 4 one-file micro-batches so the
     // watermark ADVANCES between triggers (outer rows only emit when
     // the watermark passes click_ts + 30 min + 1 h)
@@ -116,7 +116,7 @@ class StreamingSpec extends SparkSpec {
     val chunks = rows.grouped(rows.length / 4 + 1).toSeq
     def writeChunk(c: Seq[(Long, Long, String, Long, Double)],
         name: String): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_cpo_one").toString
+      val tmp = tempDir("graft_cpo_one").toString
       c.toDF("event_id", "user_id", "event_type", "tsUs", "value")
         .coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = new java.io.File(tmp).listFiles()
@@ -178,9 +178,9 @@ class StreamingSpec extends SparkSpec {
 
   test("checkpointed query restarts without reprocessing or duplicating") {
     withConf("spark.sql.legacy.parquet.nanosAsLong", "true") {
-      val srcDir = java.nio.file.Files.createTempDirectory("ckpt-src").toString
-      val outDir = java.nio.file.Files.createTempDirectory("ckpt-out").toString + "/t"
-      val ckpt = java.nio.file.Files.createTempDirectory("ckpt-ck").toString
+      val srcDir = tempDir("ckpt-src").toString
+      val outDir = tempDir("ckpt-out").toString + "/t"
+      val ckpt = tempDir("ckpt-ck").toString
       val once = spark.read.parquet(s"$dir/events.parquet")
       once.coalesce(1).write.mode("overwrite").parquet(srcDir)
       once.coalesce(1).write.mode("append").parquet(srcDir)
@@ -210,8 +210,8 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("foreachBatch partitioned sink lands every event exactly once") {
-    val outDir = java.nio.file.Files.createTempDirectory("psink").toString + "/t"
-    val ckpt = java.nio.file.Files.createTempDirectory("psink-ck").toString
+    val outDir = tempDir("psink").toString + "/t"
+    val ckpt = tempDir("psink-ck").toString
     val q = EventStreams.writePartitionedStream(
       EventStreams.readEventStream(spark, dir), outDir, ckpt)
     try q.processAllAvailable() finally q.stop()
@@ -357,9 +357,9 @@ class StreamingSpec extends SparkSpec {
   test("composed hourly-anomaly chain (events -> watermarked windows -> " +
       "monitor) survives a mid-run restart and matches the batch row") {
     import spark.implicits._
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_chain_src")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_chain_ck").toString
-    val outDir = java.nio.file.Files.createTempDirectory("graft_chain_out").toString
+    val srcDir = tempDir("graft_chain_src")
+    val ckpt = tempDir("graft_chain_ck").toString
+    val outDir = tempDir("graft_chain_out").toString
     // event-time-ordered replay, 4 one-file micro-batches + a flush
     // sentinel that closes every real hour
     val rows = graft.sources.Tables.events(spark, dir)
@@ -368,7 +368,7 @@ class StreamingSpec extends SparkSpec {
       .collect().map(r => (r.getString(0), r.getLong(1)))
     val chunks = rows.grouped(rows.length / 4 + 1).toSeq
     def writeChunk(c: Seq[(String, Long)], name: String): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_chain_one").toString
+      val tmp = tempDir("graft_chain_one").toString
       c.toDF("event_type", "tsUs").coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = new java.io.File(tmp).listFiles()
         .find(_.getName.endsWith(".parquet")).get
@@ -515,16 +515,16 @@ class StreamingSpec extends SparkSpec {
   test("composed CUSUM chain carries its learned baseline across a " +
       "mid-run restart and matches the batch summary") {
     import spark.implicits._
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_cusum_src")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_cusum_ck").toString
-    val outDir = java.nio.file.Files.createTempDirectory("graft_cusum_out").toString
+    val srcDir = tempDir("graft_cusum_src")
+    val ckpt = tempDir("graft_cusum_ck").toString
+    val outDir = tempDir("graft_cusum_out").toString
     val rows = graft.sources.Tables.events(spark, dir)
       .select(col("event_type"), unix_micros(col("ts")).as("tsUs"))
       .orderBy("tsUs", "event_type")
       .collect().map(r => (r.getString(0), r.getLong(1)))
     val chunks = rows.grouped(rows.length / 4 + 1).toSeq
     def writeChunk(c: Seq[(String, Long)], name: String): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_cusum_one").toString
+      val tmp = tempDir("graft_cusum_one").toString
       c.toDF("event_type", "tsUs").coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = new java.io.File(tmp).listFiles()
         .find(_.getName.endsWith(".parquet")).get

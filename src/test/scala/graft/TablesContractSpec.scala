@@ -128,7 +128,7 @@ class TablesContractSpec extends SparkSpec {
     import org.apache.parquet.example.data.simple.SimpleGroupFactory
     import org.apache.parquet.hadoop.example.ExampleParquetWriter
     import org.apache.parquet.schema.MessageTypeParser
-    val d = java.nio.file.Files.createTempDirectory("graft_nanos").toString
+    val d = tempDir("graft_nanos").toString
     val schema = MessageTypeParser.parseMessageType(
       "message e { required int64 event_id; " +
         "required int64 ts (TIMESTAMP(NANOS,true)); }")
@@ -169,7 +169,7 @@ class TablesContractSpec extends SparkSpec {
     * s1, increment d2 still in its `inc=d2` dirs. */
   private lazy val admissionRoot: String = {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_footer")
+    val root = tempDir("graft_footer")
       .toString + "/state"
     Admission.admit(Seq((1L, "aa bb cc dd ee ff gg", "s"))
       .toDF("doc_id", "text", "source"), root, "d1")
