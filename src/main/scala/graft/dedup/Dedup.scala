@@ -114,11 +114,9 @@ object Dedup {
     * a chain a~b~c (where a,c were never directly compared) still
     * collapses to one survivor. */
   def dedupClusters(df: DataFrame, idCol: String, textCol: String,
-      threshold: Double, maxDf: Int = DefaultMaxDf,
-      checkpointDir: Option[String] = None): DataFrame = {
+      threshold: Double, maxDf: Int = DefaultMaxDf): DataFrame = {
     val pairs = nearDupPairs(df, idCol, textCol, threshold, maxDf = maxDf)
-    val comps = graft.query.ConnectedComponents.run(pairs, "id_a", "id_b",
-      checkpointDir = checkpointDir)
+    val comps = graft.query.ConnectedComponents.run(pairs, "id_a", "id_b")
     // non-minimal members of each component are the losers
     val losers = comps.filter(col("vertex") =!= col("component"))
       .select(col("vertex").as(idCol))
@@ -176,7 +174,7 @@ object Dedup {
     // without this the persist outlives the query for the whole
     // session (CacheManager WARN spam on re-calls, and at 100 TB the
     // signature table is a large block to leak).
-    val out = survivors.localCheckpoint()
+    val out = graft.query.Checkpoints.cut(survivors)
     release()
     out
   }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.functions.VectorFunctions
-import graft.query.KMeans
+import graft.query.{Checkpoints, KMeans}
 
 /** SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning at
   * web-scale through semantic deduplication") — the PRODUCTION entry
@@ -73,7 +73,7 @@ object SemanticDedup {
   def run(emb: DataFrame, idCol: String, vecCol: String,
       centroids: DataFrame, threshold: Double): DataFrame = {
     val (plan, release) = runPlan(emb, idCol, vecCol, centroids, threshold)
-    val out = plan.localCheckpoint()
+    val out = Checkpoints.cut(plan)
     release()
     out
   }

@@ -184,7 +184,7 @@ object TextFunctions {
     // accumulates cache entries until eviction pressure (and re-calls
     // spam "Asked to cache already cached data"). `CacheHygieneSpec`
     // pins the CacheManager empty after every dedup/ANN entry point.
-    val out = survivors.localCheckpoint()
+    val out = graft.query.Checkpoints.cut(survivors)
     release()
     out
   }

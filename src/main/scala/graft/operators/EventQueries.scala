@@ -549,13 +549,13 @@ object EventQueries {
       .select(col("ts"), col("event_type").as("et"), col("value"))
     // ONE scan of the fact table: the spine bounds and the type
     // dimension both derive from the (hours × |keys|)-sized hourly
-    // aggregate, which is materialized once (localCheckpoint) — the
+    // aggregate, which is materialized once (a lineage cut) — the
     // earlier form re-scanned 100 TB of events three times for two
     // tiny frames (round-11 review finding)
     val agg = graft.query.Checkpoints.cut(
       ev.groupBy(date_trunc("hour", col("ts")).as("h"), col("et"))
         .agg(count(lit(1)).as("n_events"),
-          sum(round(col("value") * 100).cast("long")).as("cents")), None)
+          sum(round(col("value") * 100).cast("long")).as("cents")))
     val bounds = agg.agg(min("h").as("h0"), max("h").as("h1"))
     val hrs = bounds.select(explode(
       sequence(col("h0"), col("h1"), expr("interval 1 hour"))).as("h"))

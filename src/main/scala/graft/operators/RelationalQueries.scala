@@ -125,12 +125,16 @@ object RelationalQueries {
     * where the dim side would auto-broadcast at test scale. */
   /** One bucketed-table location per JVM: repeated invocations (the
     * gate, the plan-guard sweep, re-runs in a session) overwrite in
-    * place instead of leaking a fresh temp directory each call. */
-  private lazy val bucketedBase: String = java.nio.file.Files
+    * place instead of leaking a fresh temp directory each call; each
+    * call registers it for delete on exit (the `PipelineQueries.runRoot`
+    * rule), so the directory goes with the JVM. */
+  private[graft] lazy val bucketedBase: String = java.nio.file.Files
     .createTempDirectory("graft-bucketed-cat").toString
 
   private def bucketedJoinAgg(s: SparkSession, d: String): DataFrame = {
     val base = bucketedBase
+    val basePath = new org.apache.hadoop.fs.Path(base)
+    basePath.getFileSystem(s.sparkContext.hadoopConfiguration).deleteOnExit(basePath)
     graft.sources.Bucketing.writeBucketed(
       Tables.orders(s, d).select("o_orderkey", "o_orderpriority"),
       "graft_orders_gate_b", "o_orderkey", 8, s"$base/orders")

@@ -465,8 +465,7 @@ object TextQueries {
     // boundary rule as jaccardPairs/dupNgramMass; the cut frame is
     // narrow (id, 64-char signature).
     val sim = graft.query.Checkpoints.cut(graft.functions.TextFunctions
-      .simhashBits(Tables.documents(s, d), "doc_id", "text", bits = 64),
-      graft.query.Checkpoints.dirFromConf(s))
+      .simhashBits(Tables.documents(s, d), "doc_id", "text", bits = 64))
     val chunks = sim
       .select(col("doc_id"), col("simhash"),
         explode(sequence(lit(0), lit(3))).as("i"))
@@ -716,8 +715,7 @@ object TextQueries {
     // index, O(words²) per document. Measured: 139 s single-task at
     // sf0.1 (the worst stage in the whole catalog sweep) vs ~0.4 s
     // with the cut; the plan excerpt is in OPTIMIZATION_r14.md.
-    val whs = graft.query.Checkpoints.cut(windowHashesOf(docs),
-      graft.query.Checkpoints.dirFromConf(s))
+    val whs = graft.query.Checkpoints.cut(windowHashesOf(docs))
     val h = whs.select(col("doc_id"), explode(col("whs")).as("wh"))
     val counts = h.groupBy("wh").agg(count(lit(1)).as("c"))
     h.join(counts, "wh")
@@ -781,10 +779,9 @@ object TextQueries {
     * and md5-hashed twice per query. The cut stores the NARROW
     * (doc_id, hashes) frame, ~8 bytes/token, not the 5-column
     * exploded position table. */
-  def substrDedupOf(docs: DataFrame,
-      checkpointDir: Option[String] = None): DataFrame = {
+  def substrDedupOf(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val whs = graft.query.Checkpoints.cut(windowHashesOf(docs), checkpointDir)
+    val whs = graft.query.Checkpoints.cut(windowHashesOf(docs))
     val pos = whs
       .select(col("doc_id"), (size(col("whs")) + 3).as("n_tokens"),
         posexplode(col("whs")).as(Seq("i", "wh")))
@@ -839,9 +836,8 @@ object TextQueries {
     * slices of the gaps BETWEEN covered intervals — O(n + |starts|),
     * where the previous per-token membership probe was
     * O(n·|starts|), quadratic on a long fully-duplicated document. */
-  def substrCutOf(docs: DataFrame,
-      checkpointDir: Option[String] = None): DataFrame = {
-    val whs = graft.query.Checkpoints.cut(windowHashesOf(docs), checkpointDir)
+  def substrCutOf(docs: DataFrame): DataFrame = {
+    val whs = graft.query.Checkpoints.cut(windowHashesOf(docs))
     val pos = whs
       .select(col("doc_id"), posexplode(col("whs")).as(Seq("i", "wh")))
       .withColumn("pos", col("i") + 1)

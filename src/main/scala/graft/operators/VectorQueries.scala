@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Q
 import graft.functions.VectorFunctions
-import graft.query.KMeans
+import graft.query.{Checkpoints, KMeans}
 import graft.sources.Tables
 
 /** Similarity search over the `embeddings` table (Array[Float], dim=64):
@@ -656,7 +656,7 @@ object VectorQueries {
     // (code assignment + ADC lookup), and without the cut each would
     // re-run the full corpus posexplode + aggregation lineage — the
     // q_semantic_dedup double-compute this round removed elsewhere
-    val cb = sliced(labelCentroids(emb)).localCheckpoint()
+    val cb = Checkpoints.cut(sliced(labelCentroids(emb)))
     val q = query0(emb)
     pqAssign(subvectors(emb), cb)
       .join(broadcast(cb), Seq("sub", "cluster"))
@@ -824,10 +824,9 @@ object VectorQueries {
     val qArr = q.head.getSeq[Double](0).toArray
     val (centC, asgC) = trainedCoarse(s, emb)
     // residuals: x − centroid(assigned cell)
-    val resid = asgC.join(centC, Seq("cluster"))
+    val resid = Checkpoints.cut(asgC.join(centC, Seq("cluster"))
       .select(col("vec_id"), col("cluster"),
-        expr("zip_with(e, cvec, (a, b) -> a - b)").as("embedding"))
-      .localCheckpoint()
+        expr("zip_with(e, cvec, (a, b) -> a - b)").as("embedding")))
     val (centT, codes) = pqTrain(resid, k = pqK, iters = 2)
     val probed = probe(centC, q, nProbe, tieDecimals = 9)
     // per-cell query residual (nProbe rows), then the nProbe·8·k

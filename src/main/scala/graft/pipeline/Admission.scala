@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.dedup.Dedup
-import graft.query.KMeans
+import graft.query.{Checkpoints, KMeans}
 import graft.sources.Parquet
 
 /** Daily-crawl admission loop — the composed incremental form of the
@@ -57,10 +57,11 @@ import graft.sources.Parquet
   * index/digest rows with the equi-join broadcastable when the
   * increment is small; decision tables (ids, signatures of the
   * increment) are eagerly materialized BEFORE any state write so no
-  * write's plan re-scans a state directory mid-update (at cluster
-  * scale: reliable checkpoint instead of localCheckpoint, same
-  * boundary). Raw text crosses no exchange — the corpus append is a
-  * semi-join of the increment input against the admitted-id list.
+  * write's plan re-scans a state directory mid-update (through
+  * [[Checkpoints.cut]], so `spark.graft.checkpointDir` makes them
+  * reliable checkpoints at cluster scale, same boundary). Raw text
+  * crosses no exchange — the corpus append is a semi-join of the
+  * increment input against the admitted-id list.
   *
   * Why [[compact]] exists: without it a daily loop run for years
   * accumulates one `inc=<id>` subdir per day in `index/`, `digests/`
@@ -637,10 +638,10 @@ object Admission {
     // the inc dirs on the driver and excludes this increment), which
     // no concurrent write below touches.
     val freshKeys = labeled(s, s"admit $incId: fresh-keys") {
-      freshKeysPlan.localCheckpoint()
+      Checkpoints.cut(freshKeysPlan)
     }
     val incIndex = labeled(s, s"admit $incId: inc-index") {
-      incIndexOf(freshKeys).localCheckpoint()
+      Checkpoints.cut(incIndexOf(freshKeys))
     }
     val freshDigests = freshKeys.select("digest")
     // single consumer (the corpus write) — stays lazy: the admitted-id
@@ -832,7 +833,7 @@ object Admission {
     // decision tables materialize BEFORE state writes (same boundary
     // rule as [[admit]])
     val freshKeys = labeled(s, s"admit $incId: fresh-keys") {
-      freshKeysPlan.localCheckpoint()
+      Checkpoints.cut(freshKeysPlan)
     }
     val freshDigests = freshKeys.select("digest")
     val cbSchema = StructType(Seq(StructField("sub", IntegerType),
@@ -845,21 +846,19 @@ object Admission {
     // small codebook jobs whose wall clock is mostly scheduling.
     val (incIndex, (incVecs, incSem, incHasVecs, cb, cbNew)) = par2(s,
       () => labeled(s, s"admit $incId: inc-index") {
-        incIndexOf(freshKeys).localCheckpoint()
+        Checkpoints.cut(incIndexOf(freshKeys))
       },
       () => labeled(s, s"admit $incId: vector chain") {
         // semantic decision tables: vectors of the fresh docs (norm
         // precomputed once — linear work) and their SRP bucket rows
-        val incVecs = emb
+        val incVecs = Checkpoints.cut(emb
           .select(col(idCol), col(vecCol).cast("array<double>").as("e"))
           .join(freshKeys.select(idCol), Seq(idCol), "left_semi")
-          .withColumn("n", sqrt(vf.vecDot(col("e"), col("e"))))
-          .localCheckpoint()
-        val incSem = graft.query.AnnLsh
+          .withColumn("n", sqrt(vf.vecDot(col("e"), col("e")))))
+        val incSem = Checkpoints.cut(graft.query.AnnLsh
           .bucketedMulti(incVecs.select(col(idCol), col("e")), "e",
             dim, nBits, nTables)
-          .select(col(idCol), col("table"), col("bucket"))
-          .localCheckpoint()
+          .select(col(idCol), col("table"), col("bucket")))
         // the per-root codebook: load, or train on THIS increment's
         // vectors (the first that carries any). A fresh codebook is
         // used directly from its materialized frame; its parquet
@@ -868,8 +867,8 @@ object Admission {
         // the vecs/ write.
         val incHasVecs = !incVecs.isEmpty
         val (cb, cbNew): (DataFrame, Boolean) =
-          if (haveCb) (s.read.schema(cbSchema).parquet(pqcbPath(root))
-            .localCheckpoint(), false)
+          if (haveCb) (Checkpoints.cut(
+            s.read.schema(cbSchema).parquet(pqcbPath(root))), false)
           else if (!incHasVecs)
             (s.createDataFrame(s.sparkContext.emptyRDD[Row], cbSchema), false)
           else // (sub int, c_code int, cvec), already cut
@@ -943,13 +942,13 @@ object Admission {
         }) else Nil)
     val legs: Seq[() => Any] = Seq(
       () => labeled(s, s"admit $incId: text admitted") {
-        textAdmitted.localCheckpoint()
+        Checkpoints.cut(textAdmitted)
       },
       () => labeled(s, s"admit $incId: sem cross losers") {
-        crossSemLosers.localCheckpoint()
+        Checkpoints.cut(crossSemLosers)
       },
       () => labeled(s, s"admit $incId: sem within losers") {
-        withinSemLosers.localCheckpoint()
+        Checkpoints.cut(withinSemLosers)
       })
     val phase1 = inParallel(s)(legs ++ writes)
     val admittedIds = phase1(0).asInstanceOf[DataFrame]

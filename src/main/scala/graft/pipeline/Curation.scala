@@ -52,10 +52,10 @@ object Curation {
     * 100 TB the saved work is four extra corpus scans plus their
     * dedup shuffles, while the write cost stays one boundary table.
     * The cut stores the boundary table once (executor-local by
-    * default, durable under `checkpointDir` — the same loss-recovery
-    * trade documented on [[graft.query.Checkpoints]]). Off = fully
-    * lazy single plan, useful when the caller materializes stage
-    * outputs itself (e.g. writing each boundary to parquet). */
+    * default, durable under `spark.graft.checkpointDir` — the same
+    * loss-recovery trade documented on [[graft.query.Checkpoints]]).
+    * Off = fully lazy single plan, useful when the caller materializes
+    * stage outputs itself (e.g. writing each boundary to parquet). */
   final case class Config(
       jaccardThreshold: Double = 0.8,
       shingleN: Int = 3,
@@ -67,8 +67,7 @@ object Curation {
       chunkTokens: Int = 64,
       chunkStride: Int = 48,
       packCapacity: Int = 2048,
-      materializeBoundaries: Boolean = true,
-      checkpointDir: Option[String] = None)
+      materializeBoundaries: Boolean = true)
 
   private def w(c: Column): Column = TextFunctions.words(c)
 
@@ -100,8 +99,7 @@ object Curation {
           conv(substring(md5(col("shingle")), 1, 12), 16, 10).cast("long")
             .as("shingle")),
       "doc_id", cfg.jaccardThreshold, cfg.maxDf)
-    val comps = graft.query.ConnectedComponents.run(pairs, "id_a", "id_b",
-      checkpointDir = cfg.checkpointDir)
+    val comps = graft.query.ConnectedComponents.run(pairs, "id_a", "id_b")
     val losers = comps.filter(col("vertex") =!= col("component"))
       .select(col("vertex").as("doc_id"))
     docs.join(losers, Seq("doc_id"), "left_anti")
@@ -143,7 +141,7 @@ object Curation {
         explode(TextFunctions.winnowMins(col("whs"), cfg.winnowW)).as("fp"))
     val fps =
       if (cfg.materializeBoundaries)
-        graft.query.Checkpoints.cut(fpsLazy, cfg.checkpointDir)
+        graft.query.Checkpoints.cut(fpsLazy)
       else fpsLazy
     val testFp = fps.filter(col("split") === "test").select("fp").distinct()
     val contaminated = fps.filter(col("split") === "train")
@@ -271,13 +269,12 @@ object Curation {
     def widen(df: DataFrame): DataFrame = {
       val p = df.sparkSession.sparkContext.defaultParallelism
       if (df.rdd.getNumPartitions < p)
-        graft.query.Checkpoints.cut(
-          df.repartition(p, col("doc_id")), cfg.checkpointDir)
+        graft.query.Checkpoints.cut(df.repartition(p, col("doc_id")))
       else df
     }
     def cut(df: DataFrame): DataFrame =
       if (cfg.materializeBoundaries)
-        widen(graft.query.Checkpoints.cut(df, cfg.checkpointDir))
+        widen(graft.query.Checkpoints.cut(df))
       else df
     val s1 = cut(exactDedup(docs))
     val s2 = nearDedupClusters(s1, cfg)

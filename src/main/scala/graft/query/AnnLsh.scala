@@ -138,7 +138,7 @@ object AnnLsh {
     // then release it (materialize-then-release, see
     // [[graft.dedup.Dedup.embedNearDupBucketed]]) — the persist must
     // not outlive the query it serves.
-    val out = graph.localCheckpoint()
+    val out = Checkpoints.cut(graph)
     release()
     out
   }

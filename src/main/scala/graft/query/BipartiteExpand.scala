@@ -45,8 +45,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *    shuffled exactly once per orientation ([[graft.ShufflePathPlanSpec]]
   *    pins this). Each level's output that another level consumes is
   *    persisted and counted in one job (the count is the empty-frontier
-  *    exit), and the final result is cut ([[Checkpoints.cut]], durable
-  *    under `checkpointDir`) before the caches are released.
+  *    exit), and the final result is cut ([[Checkpoints.cut]]) before
+  *    the caches are released.
   *
   * [[FrontierMode.Auto]] holds levels on the driver while everything
   * they collect stays within both ceilings, and switches to the
@@ -164,7 +164,8 @@ object BipartiteExpand {
     * release. */
   private final class Distributed(
       e0: DataFrame, ownCache: Boolean, srcCol: String, dstCol: String,
-      dedupEdges: Boolean, checkpointDir: Option[String]) {
+      dedupEdges: Boolean) {
+    private val durable = Checkpoints.durable(e0.sparkSession)
     private var eSrc = e0
     private var eDstOpt: Option[DataFrame] = None
     private val owned = mutable.ListBuffer.empty[DataFrame]
@@ -187,23 +188,23 @@ object BipartiteExpand {
     }
 
     /** Materialize `df` and learn its row count in ONE job (persist +
-      * count), or reliably checkpoint first when a durable dir is set.
+      * count), or cut it first when the session makes cuts durable.
       * The persisted frame is registered for release. */
-    def matCount(df: DataFrame): (DataFrame, Long) = checkpointDir match {
-      case Some(_) =>
-        val c = Checkpoints.cut(df, checkpointDir)
+    def matCount(df: DataFrame): (DataFrame, Long) =
+      if (durable) {
+        val c = Checkpoints.cut(df)
         (c, c.count())
-      case None =>
+      } else {
         val p = df.persist(StorageLevel.MEMORY_AND_DISK)
         owned += p
         (p, p.count())
-    }
+      }
 
     /** Cut `df` while the caches are alive (releasing first would force
       * the last level to re-derive the edge table from source); lazy
       * when nothing was cached. */
     def result(df: DataFrame): DataFrame =
-      if (owned.nonEmpty) Checkpoints.cut(df, checkpointDir) else df
+      if (owned.nonEmpty) Checkpoints.cut(df) else df
 
     def release(): Unit = owned.foreach(_.unpersist())
   }
@@ -228,10 +229,9 @@ object BipartiteExpand {
       level: Int,
       dedupEdges: Boolean = false,
       mode: FrontierMode = FrontierMode.Auto(),
-      checkpointDir: Option[String] = None,
       onLevelMode: (Int, Boolean) => Unit = (_, _) => ()): DataFrame =
     run(spark, edges, srcCol, dstCol, root, level, dedupEdges, mode,
-      checkpointDir, onLevelMode, withEdges = false).vertices
+      onLevelMode, withEdges = false).vertices
 
   /** Full expansion with discovered edges per level (G7): returns both
     * the vertex set and the (src, via-dst, src') co-occurrence edges,
@@ -245,16 +245,15 @@ object BipartiteExpand {
       level: Int,
       dedupEdges: Boolean = false,
       mode: FrontierMode = FrontierMode.Auto(),
-      checkpointDir: Option[String] = None,
       onLevelMode: (Int, Boolean) => Unit = (_, _) => ()): Expansion =
     run(spark, edges, srcCol, dstCol, root, level, dedupEdges, mode,
-      checkpointDir, onLevelMode, withEdges = true)
+      onLevelMode, withEdges = true)
 
   /** The one BFS loop behind both entry points. */
   private def run(spark: SparkSession, edges: DataFrame, srcCol: String,
       dstCol: String, root: Column, level: Int, dedupEdges: Boolean,
-      mode: FrontierMode, checkpointDir: Option[String],
-      onLevelMode: (Int, Boolean) => Unit, withEdges: Boolean): Expansion = {
+      mode: FrontierMode, onLevelMode: (Int, Boolean) => Unit,
+      withEdges: Boolean): Expansion = {
     val peerCol = s"${srcCol}_peer"
     val vertexSchema = StructType(Seq(edges.schema(srcCol)))
     val edgeSchema = StructType(Seq(edges.schema(srcCol), edges.schema(dstCol),
@@ -354,8 +353,7 @@ object BipartiteExpand {
 
     // ---- distributed levels: the shuffle fallback from level `l` on,
     // seeded with whatever the driver-held levels produced
-    val dist = new Distributed(e, ownCache, srcCol, dstCol, dedupEdges,
-      checkpointDir)
+    val dist = new Distributed(e, ownCache, srcCol, dstCol, dedupEdges)
     var exhausted = false
     var (frontierDf, visitedDf) =
       if (l > 1) (vertices(frontier), vertices(visited))

@@ -34,15 +34,13 @@ object ConnectedComponents {
     *               is unfinished)
     */
   def run(pairs: DataFrame, aCol: String, bCol: String,
-      maxIter: Int = 20, checkpointDir: Option[String] = None,
-      strict: Boolean = true): DataFrame = {
-    def cut(df: DataFrame): DataFrame = Checkpoints.cut(df, checkpointDir)
+      maxIter: Int = 20, strict: Boolean = true): DataFrame = {
     val sym = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
       .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
       .distinct()
       .persist()
 
-    var labels = cut(sym.select(col("src").as("vertex"))
+    var labels = Checkpoints.cut(sym.select(col("src").as("vertex"))
       .distinct()
       .withColumn("component", col("vertex")))
 
@@ -58,7 +56,7 @@ object ConnectedComponents {
         .join(labels, sym("src") === labels("vertex"))
         .groupBy(col("dst").as("vertex"))
         .agg(min("component").as("nmin"))
-      val next = cut(labels
+      val next = Checkpoints.cut(labels
         .join(neighborMin, Seq("vertex"), "left")
         .select(col("vertex"),
           least(col("component"), coalesce(col("nmin"), col("component")))
@@ -80,7 +78,7 @@ object ConnectedComponents {
         // only, never the edge table.
         val parents = labels
           .select(col("vertex").as("pv"), col("component").as("pc"))
-        labels = cut(labels
+        labels = Checkpoints.cut(labels
           .join(parents, col("component") === col("pv"), "left")
           .select(col("vertex"),
             least(col("component"), coalesce(col("pc"), col("component")))

@@ -21,16 +21,14 @@ import org.apache.spark.sql.functions._
   */
 object GraphAlgos {
 
-  /** Default iteration-lineage cut: eager localCheckpoint locally,
-    * reliable checkpoint when the session sets
-    * `spark.graft.checkpointDir` ([[Checkpoints.dirFromConf]] — the
-    * cluster fault-tolerance opt-in). Specs pass `identity` to inspect
+  /** Default iteration-lineage cut: [[Checkpoints.cut]] (eager
+    * localCheckpoint locally, reliable checkpoint when the session sets
+    * `spark.graft.checkpointDir`). Specs pass `identity` to inspect
     * the LAZY join tree — the eager form hides every internal join
     * behind an RDD scan, so a plan guard that only stringifies the
     * final plan sees nothing (round-11 review finding);
     * [[graft.PlanGuardSpec]] pins the lazy twins. */
-  val defaultCut: DataFrame => DataFrame =
-    df => Checkpoints.cut(df, Checkpoints.dirFromConf(df.sparkSession))
+  val defaultCut: DataFrame => DataFrame = Checkpoints.cut
 
   /** Both orientations (u, v) of a canonical (a < b) edge list. */
   def undirect(e: DataFrame): DataFrame =
@@ -49,9 +47,8 @@ object GraphAlgos {
     // not once per consumer (measured ~25% of q_triangle_count at
     // sf0.1; at any scale it is 4 saved re-derivations of the
     // co-order projection). Same boundary rule as jaccardPairs /
-    // the Curation cuts; durable under `spark.graft.checkpointDir`
-    // ([[Checkpoints.dirFromConf]]).
-    val e = Checkpoints.cut(e0, Checkpoints.dirFromConf(e0.sparkSession))
+    // the Curation cuts.
+    val e = Checkpoints.cut(e0)
     val deg = e.select(col("a").as("v"))
       .unionAll(e.select(col("b").as("v")))
       .groupBy("v").agg(count(lit(1)).as("dg"))

@@ -26,11 +26,13 @@ import graft.functions.VectorFunctions.{vecDot, vecSqDist}
   * The loop, one policy for every caller: the points are persisted
   * once (the cache keeps the input's partitioning, so a corpus hashed
   * by id needs no exchange for the per-point argmax); each round cuts
-  * its k-row centroid table with [[Checkpoints.cut]] under
-  * [[Checkpoints.dirFromConf]] (a reliable checkpoint when
-  * `spark.graft.checkpointDir` is set) and broadcasts it into the next
-  * assignment, so lineage never grows; [[train]] cuts its final
-  * assignment the same way and releases the points before returning.
+  * its k-row centroid table with [[Checkpoints.cut]] (a reliable
+  * checkpoint when `spark.graft.checkpointDir` is set) and broadcasts
+  * it into the next assignment, so lineage never grows; [[train]] cuts
+  * its final assignment the same way and releases the points before
+  * returning. The points are persisted, not cut: a persist is not a
+  * lineage cut, and a local checkpoint would lose the fan-out's hash
+  * partitioning on the id (one more exchange per round).
   */
 object KMeans {
 
@@ -109,8 +111,7 @@ object KMeans {
     lloyd(points, ids, seedCol, iters, metric, tieDecimals, vecCol, part) {
       (vecs, cent) =>
         (cent, Checkpoints.cut(
-          assign(vecs, cent, ids, metric, tieDecimals, vecCol, part),
-          Checkpoints.dirFromConf(points.sparkSession)))
+          assign(vecs, cent, ids, metric, tieDecimals, vecCol, part)))
     }
 
   /** [[train]]'s centroid table alone (admission's codebook): the final
@@ -129,9 +130,8 @@ object KMeans {
     require(iters >= 1, s"k-means needs at least one round, got $iters")
     val pts = points.persist()
     val vecs = pts.select(((ids ++ part).distinct :+ vecCol).map(col): _*)
-    val dir = Checkpoints.dirFromConf(points.sparkSession)
     def cut(members: DataFrame) =
-      Checkpoints.cut(centroids(members, part :+ "cluster", col(vecCol)), dir)
+      Checkpoints.cut(centroids(members, part :+ "cluster", col(vecCol)))
     var cent = cut(pts.withColumnRenamed(seedCol, "cluster"))
     (2 to iters).foreach { _ =>
       val asg = assign(vecs, cent, ids, metric, tieDecimals, vecCol, part)

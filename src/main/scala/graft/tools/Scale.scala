@@ -9,7 +9,7 @@ import graft.dedup.Dedup
 import graft.ingest.EdgeBuilder
 import graft.operators.EventQueries
 import graft.pipeline.Admission
-import graft.query.{BipartiteExpand, CoStar, GraphAlgos}
+import graft.query.{BipartiteExpand, Checkpoints, CoStar, GraphAlgos}
 import graft.sources.{Parquet, Tables}
 
 /** The scale harness: each family replicates a fixture table `factor`×
@@ -235,7 +235,7 @@ object Scale {
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
 
       val (e, buildSec) = timed {
-        val ed = strongTie(fact).localCheckpoint()
+        val ed = Checkpoints.cut(strongTie(fact))
         ed.count()
         ed
       }
@@ -243,10 +243,10 @@ object Scale {
       // co-ordered pair) — the strong-tie filter leaves ~1 triangle
       // per replica at sf0.1, which measures nothing
       val (co, coBuildSec) = timed {
-        val ed = fact.as("x").join(fact.as("y"),
+        val ed = Checkpoints.cut(fact.as("x").join(fact.as("y"),
             col("x.ok") === col("y.ok") && col("x.pk") < col("y.pk"))
           .select(col("x.pk").as("a"), col("y.pk").as("b"))
-          .distinct().localCheckpoint()
+          .distinct())
         ed.count()
         ed
       }
@@ -333,7 +333,7 @@ object Scale {
     var bounce1: Map[String, (Long, Long, Long)] = Map.empty
 
     for (factor <- factors) {
-      val fact = events(ev, factor).localCheckpoint()
+      val fact = Checkpoints.cut(events(ev, factor))
       fact.count()
 
       val (attr, attrSec) = timed {
@@ -716,9 +716,8 @@ object Scale {
 
     var hits1: Map[(String, Long, String), Long] = Map.empty
     for (factor <- factors) withWorkDir(spark, "graft_sss") { root =>
-      val fact = events(ev, factor)
-        .select(col("event_type"), unix_micros(col("ts")).as("tsUs"))
-        .localCheckpoint()
+      val fact = Checkpoints.cut(events(ev, factor)
+        .select(col("event_type"), unix_micros(col("ts")).as("tsUs")))
       val n = fact.count()
       val maxTs = fact.agg(max("tsUs")).head.getLong(0)
 

@@ -155,4 +155,23 @@ class PipelineSinkSpec extends SparkSpec {
         fs.deleteOnExit(root)
     }
   }
+
+  test("q_bucketed_join_agg registers its per-JVM table dir for delete on exit") {
+    import graft.operators.RelationalQueries
+    import spark.implicits._
+    val sfDir = s"${tempDir("graft_bucketed")}/sf_inline"
+    (0L until 40L).map(k => (k, s"${k % 5}-PRIO")).toDF("o_orderkey", "o_orderpriority")
+      .write.parquet(s"$sfDir/orders.parquet")
+    (0L until 120L).map(i => (i % 40, i % 9 + 1.0, i * 1.5))
+      .toDF("l_orderkey", "l_quantity", "l_extendedprice")
+      .write.parquet(s"$sfDir/lineitem.parquet")
+    val base = new org.apache.hadoop.fs.Path(RelationalQueries.bucketedBase)
+    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // an earlier run of the row in this JVM may have registered it
+    fs.cancelDeleteOnExit(base)
+    assert(Catalog.byName("q_bucketed_join_agg").fn(spark, sfDir).count() == 5)
+    // true only for a registered path
+    assert(fs.cancelDeleteOnExit(base), s"$base left unregistered")
+    fs.deleteOnExit(base)
+  }
 }
