@@ -57,4 +57,15 @@ object GraftSession {
     spark.sparkContext.setLogLevel(logLevel)
     spark
   }
+
+  /** Run `body` under the Spark job description `desc`, restoring the
+    * caller's after: the label names the body's jobs in listeners and
+    * the UI. Descriptions are thread-local, so parallel driver threads
+    * label independently. */
+  def labeled[A](s: SparkSession, desc: String)(body: => A): A = {
+    val sc = s.sparkContext
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(desc)
+    try body finally sc.setJobDescription(prev)
+  }
 }

@@ -21,7 +21,7 @@ object GraphQueries {
   /** The bipartite edge table: G1's adjacency (both ETS tables of the
     * reference are the two orientations of this one edge list).
     * Multiplicity is NOT removed here — every consumer either dedups
-    * per hop (BipartiteExpand's distinct after each join) or dedups
+    * per hop (BipartiteExpand's per-partition dedup of each hop) or dedups
     * itself, which avoids a full shuffle of the fact join output. */
   def copurchaseEdges(s: SparkSession, d: String): DataFrame =
     Tables.orders(s, d)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.GraftSession.labeled
 import graft.dedup.Dedup
 import graft.query.{Checkpoints, KMeans}
 import graft.sources.Parquet
@@ -167,17 +168,6 @@ object Admission {
   private def par2[A, B](s: SparkSession, a: () => A, b: () => B): (A, B) = {
     val r = inParallel[Any](s)(Seq(a, b))
     (r(0).asInstanceOf[A], r(1).asInstanceOf[B])
-  }
-
-  /** Run `body` under a Spark job description (guide §1.5 — the label
-    * shows up in QueryProfile/UI so the loop's many small jobs stay
-    * attributable), restoring the caller's label after. Descriptions
-    * are thread-local, so the parallel thunks label independently. */
-  private def labeled[A](s: SparkSession, desc: String)(body: => A): A = {
-    val sc = s.sparkContext
-    val prev = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(desc)
-    try body finally sc.setJobDescription(prev)
   }
 
   /** Keyed state kinds (bucketed segments). `index`/`digests` exist

@@ -4,10 +4,12 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.unsafe.types.UTF8String
+import graft.GraftSession
 
 /** Iterative bipartite graph expansion — the reference engine's single
   * query capability (SURVEY.md §2.5, master.erl:251-304).
@@ -16,27 +18,27 @@ import org.apache.spark.unsafe.types.UTF8String
   * tables (movie→cast, actor→movies) sharded by hash, and answers
   * "all co-stars of X up to depth L" by a master-driven loop whose
   * frontier and visited set live in the master process. Here the graph
-  * is ONE edge DataFrame viewed from both ends, a level is two chained
-  * equi-joins (src→dst, dst→src), and the visited check is true
+  * is ONE edge DataFrame viewed from both ends, a level is two hops
+  * (src→dst, dst→src), and the visited check is true
   * global-BFS dedup (documented deviation 1 in SURVEY.md §7: strictly
   * more deduplication than the reference's per-DFS-path set, same
   * vertex set).
   *
   * Two level shapes, picked by [[FrontierMode]]:
   *  - DRIVER-HELD (the default while frontiers stay small): like the
-  *    reference's master, the driver keeps the frontier and the
-  *    visited set. A level is ONE bounded collect of what it produces
-  *    (`limit(ceiling + 1)`: the reached vertices, or the
-  *    `(src, via, peer)` triples for [[expandWithEdges]]); the driver
-  *    subtracts the visited set and hands the fresh vertices to the
-  *    next level — inlined as an IN-set filter while small, else as a
-  *    local relation Spark broadcasts from the driver. A broadcast
-  *    frontier passes through the driver anyway, so this moves no
-  *    extra data — it removes the per-level persist/count probe, the
-  *    final lineage cuts and the cache-release ordering, because the
-  *    results are local relations too. On small graphs a query's wall
-  *    time is job scheduling, not data: a level-4 [[CoStar]] query plus
-  *    its two collects went from 36 Spark jobs to 9.
+  *    reference's master (master.erl:275-283), the driver keeps the
+  *    frontier and the visited set, and a level is two scatter/gather
+  *    rounds, each ONE narrow Spark job with no join or exchange: hop 1
+  *    collects the `(src, dst)` edges whose src is in the frontier, hop
+  *    2 those whose dst hop 1 reached. A hop filters the edge side's
+  *    plan against its key set, a broadcast variable, deduplicating and
+  *    capping its rows at `cap + 1` within each partition, so at most
+  *    partitions × (cap + 1) rows are in transit: the worst case of
+  *    Spark's own limit collect. The driver pairs the hops into the
+  *    distinct `(src, via, peer)` triples ([[expandWithEdges]]) or
+  *    reached vertices. Results are local relations: no persist/count
+  *    probe, cut or cache release. A level-4 [[CoStar]] query plus its
+  *    two collects runs 6 Spark jobs.
   *  - DISTRIBUTED (the shuffle fallback, for frontiers too large to
   *    hold): both edge orientations are cached pre-partitioned on their
   *    hop key (the reference's two ETS tables, server.erl:117-122), so
@@ -51,10 +53,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * [[FrontierMode.Auto]] holds levels on the driver while everything
   * they collect stays within both ceilings, and switches to the
   * distributed path from the first level that would exceed one. A
-  * driver-held level never brings more than the ceilings to the
-  * driver: rows are bounded by the limit, and bytes are checked on the
-  * driver after the collect, with the limit also capped at the bytes
-  * left divided by the previous level's measured bytes per row.
+  * driver-held level keeps no more than the ceilings: rows are bounded
+  * by the cap (a hop past it overflows its level), and bytes are
+  * checked after the pairing, with the cap also bounded by the bytes
+  * left over the previous level's measured bytes per row.
   */
 object BipartiteExpand {
 
@@ -95,13 +97,6 @@ object BipartiteExpand {
     * the row ceiling first and only genuinely wide keys move the
     * switch earlier. */
   val DefaultMaxBroadcastBytes: Long = 64L << 20
-
-  /** Largest driver-held frontier inlined into the level's plan as an
-    * IN-set filter instead of a broadcast local relation: it saves the
-    * broadcast's job (~25% of a co-star query's wall time on the IMDB
-    * benchmark graph), while every task carries the set, so large
-    * frontiers keep the broadcast. */
-  private val InlineFrontierMax = 1024
 
   /** Result of an expansion: vertices of the root's type and the
     * (src, via-dst, src') edges that discovered them (G7,
@@ -288,35 +283,62 @@ object BipartiteExpand {
     var heldBytes = 0L
     var bytesPerRow = 1L
 
-    /** One driver-held level from the frontier `f`: the distinct
-      * (src, via, peer) triples — self rows kept, they prove the root
-      * exists — or the distinct reached src vertices; None when the
-      * collect would exceed what is left of either ceiling. A small
-      * frontier rides in the plan as an IN-set filter; a larger one is
-      * broadcast from the driver as a local relation, which costs one
-      * more job. */
-    def collectLevel(f: Seq[Any]): Option[Array[Row]] = {
-      val incident =
-        if (f.sizeIs <= InlineFrontierMax) e.filter(col(srcCol).isin(f: _*))
-        else broadcast(vertices(f)).join(e, srcCol)
-      val out =
-        if (withEdges)
-          broadcast(incident).join(e.withColumnRenamed(srcCol, peerCol), dstCol)
-            .select(col(srcCol), col(dstCol), col(peerCol)).distinct()
-        else
-          broadcast(incident.select(dstCol)).join(e, dstCol)
-            .select(col(srcCol)).distinct()
+    // A cached edge side is planned once per query; an uncached one per
+    // hop, with the key filter in the plan, where it reaches the source.
+    lazy val plan = e.queryExecution.toRdd
+    val cached = ownCache || edges.storageLevel != StorageLevel.NONE
+    val types = Array(vertexSchema.head.dataType, edges.schema(dstCol).dataType)
+
+    /** Hop `n` of level `l`: the distinct projections onto columns `out`
+      * (0 = src, 1 = dst) of the edges whose column `k` is in `keys`
+      * (NULL never matches), or None past `cap` rows. */
+    def hop(l: Int, n: Int, keys: Iterable[Any], k: Int, out: Seq[Int],
+        cap: Long): Option[Set[Row]] =
+      if (keys.isEmpty) Some(Set.empty) // nothing to match: no job
+      else GraftSession.labeled(spark, s"bfs L$l hop$n keys=${keys.size}") {
+        import CatalystTypeConverters._
+        val kt = types(k)
+        val ks = spark.sparkContext.broadcast(new java.util.HashSet[Any](
+          keys.map(createToCatalystConverter(kt)).asJavaCollection))
+        val cols = out.map(o => (o, types(o), createToScalaConverter(types(o))))
+        val rdd = if (cached) plan
+          else e.filter(col(e.columns(k)).isin(keys.toSeq: _*)).queryExecution.toRdd
+        val rows = try rdd.mapPartitions { it =>
+          val want = ks.value
+          val seen = mutable.HashSet.empty[Row]
+          while (it.hasNext && seen.size <= cap) {
+            val r = it.next() // reused by the scan: convert (copy) before keeping
+            if (!r.isNullAt(k) && want.contains(r.get(k, kt)))
+              seen += Row.fromSeq(cols.map { case (o, t, toScala) => toScala(r.get(o, t)) })
+          }
+          seen.iterator
+        }.collect().toSet finally ks.destroy()
+        if (rows.size > cap) None else Some(rows)
+      }
+
+    /** Driver-held level `l` from the frontier `f`: whether `f` has an
+      * edge, and the distinct (src, via, peer) triples (self rows kept)
+      * or reached src vertices; None past what is left of a ceiling. */
+    def collectLevel(l: Int, f: Seq[Any]): Option[(Boolean, Vector[Row])] = {
       val bytesLeft = maxBytes - heldBytes
       val cap = math.min(maxRows - heldRows, bytesLeft / bytesPerRow)
-      val rows =
-        if (cap < Int.MaxValue) out.limit(cap.toInt + 1).collect() else out.collect()
-      val bytes = rows.iterator.map(rowBytes).sum
-      if (rows.length > cap || bytes > bytesLeft) None
-      else {
+      for {
+        h1 <- hop(l, 1, f, 0, if (withEdges) Seq(0, 1) else Seq(1), cap)
+        h2 <- hop(l, 2, h1.map(r => r.get(r.length - 1)), 1,
+          if (withEdges) Seq(0, 1) else Seq(0), cap)
+        paired = if (!withEdges) h2.iterator else {
+          val peers = h2.groupMap(_.get(1))(_.get(0))
+          h1.iterator.flatMap(r =>
+            peers.getOrElse(r.get(1), Nil).map(Row(r.get(0), r.get(1), _)))
+        }
+        rows = (if (cap < Int.MaxValue) paired.take(cap.toInt + 1) else paired).toVector
+        bytes = rows.iterator.map(rowBytes).sum
+        if rows.length <= cap && bytes <= bytesLeft
+      } yield {
         heldRows += rows.length
         heldBytes += bytes
         if (rows.nonEmpty) bytesPerRow = math.max(1L, bytes / rows.length)
-        Some(rows)
+        (h1.nonEmpty, rows)
       }
     }
 
@@ -331,10 +353,10 @@ object BipartiteExpand {
       var done = false
       while (l < level && !done && driverHeld) {
         onLevelMode(l, true)
-        collectLevel(frontier) match {
+        collectLevel(l, frontier) match {
           case None => driverHeld = false // this level and the rest run distributed
-          case Some(rows) =>
-            if (l == 1 && rows.nonEmpty) visited += frontier.head
+          case Some((hasEdge, rows)) =>
+            if (l == 1 && hasEdge) visited += frontier.head
             val reached = rows.iterator.map(r => r.get(if (withEdges) 2 else 0))
             val fresh = reached.filter(visited.add).toVector
             if (withEdges)
@@ -381,7 +403,7 @@ object BipartiteExpand {
         if (withEdges) {
           val discovered0 = frontierDf.join(hop1E, srcCol)
             .join(hop2E.withColumnRenamed(srcCol, peerCol), dstCol)
-            .filter(col(srcCol) =!= col(peerCol))
+            .filter(!(col(srcCol) <=> col(peerCol))) // a NULL peer is kept
             .select(col(srcCol), col(dstCol), col(peerCol))
             .distinct()
           val discovered = if (more) dist.matCount(discovered0)._1 else discovered0

@@ -23,9 +23,14 @@ object CoStar {
   /** Result graph: vertices of the root's type, and (vertex, via,
     * co-vertex) co-occurrence edges (G7, master.erl:255-263). */
   final case class Result(vertices: DataFrame, edges: DataFrame) {
-    /** Same-type vertex pairs as the reference's digraph edges. */
-    def vertexEdges(tpe: QueryType): DataFrame =
-      edges.select(col(tpe.src), col(s"${tpe.src}_peer")).distinct()
+    /** Same-type vertex pairs as the reference's digraph edges; a
+      * driver-held result is deduplicated on the driver, with no job. */
+    def vertexEdges(tpe: QueryType): DataFrame = {
+      val pairs = edges.select(col(tpe.src), col(s"${tpe.src}_peer"))
+      if (!edges.isLocal) pairs.distinct()
+      else edges.sparkSession.createDataFrame(
+        java.util.Arrays.asList(pairs.collect().distinct: _*), pairs.schema)
+    }
   }
 
   require(ActorQuery.src != ActorQuery.dst)

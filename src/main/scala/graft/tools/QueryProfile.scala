@@ -4,9 +4,12 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
 
 /** Per-job/stage profiler for catalog queries (optimization-round
   * diagnostic; guide §1 "measure first"). For each named query: one
-  * untimed warm-up, then one measured run with a listener recording
-  * every job's wall time and every stage's task-time / shuffle
-  * read+write bytes, printed in submission order. This answers "which
+  * untimed warm-up, then `runs` measured runs, each under its own job
+  * group, with a listener recording every job's wall time and every
+  * stage's task-time / shuffle read+write bytes, printed in submission
+  * order. A run's report waits until the listener has seen every job
+  * of its group end (failing after 60 s), so the job count is the
+  * run's own, never short of late events. This answers "which
   * internal job of a multi-job operator (BFS levels, checkpoint cuts,
   * CC rounds) carries the wall clock" — the attribution the flat bench
   * median cannot give.
@@ -68,21 +71,30 @@ object QueryProfile {
     def janinoN: Long = org.apache.spark.metrics.source.CodegenMetrics
       .METRIC_COMPILATION_TIME.getCount
 
+    val sc = spark.sparkContext
     names.foreach { n =>
       val q = graft.Catalog.byName.getOrElse(n, sys.error(s"unknown query: $n"))
       q.fn(spark, sfDir).count() // warm-up
       (1 to runs).foreach { r =>
         jobs.synchronized(jobs.clear()); stages.synchronized(stages.clear())
-        spark.sparkContext.addSparkListener(listener)
+        sc.addSparkListener(listener)
+        val group = s"profile-$n-$r-${System.nanoTime()}"
         val j0 = jit
         val g0 = janinoN
         val t0 = System.nanoTime()
-        q.fn(spark, sfDir).count()
+        sc.setJobGroup(group, s"QueryProfile $n run $r", interruptOnCancel = false)
+        try q.fn(spark, sfDir).count() finally sc.clearJobGroup()
         val wall = (System.nanoTime() - t0) / 1e9
-        // drain listener events before reading (private bus: just wait)
-        Thread.sleep(300)
-        spark.sparkContext.removeSparkListener(listener)
-        println(f"==== $n run $r wall=$wall%.3f s jit_delta=${jit - j0} ms codegen_compiles=${janinoN - g0} ====")
+        // the listener bus is asynchronous: wait until it has seen every
+        // job of the run end, so no late event is dropped or miscounted
+        val ids = sc.statusTracker.getJobIdsForGroup(group).toSet
+        def seen = jobs.synchronized(ids.forall(id => jobs.get(id).exists(_.ms >= 0)))
+        val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+        while (!seen && System.nanoTime() < deadline) Thread.sleep(20)
+        sc.removeSparkListener(listener)
+        if (!seen) sys.error(s"$n run $r: the listener saw ${jobs.size} of " +
+          s"${ids.size} jobs end within 60 s")
+        println(f"==== $n run $r wall=$wall%.3f s jobs=${ids.size} jit_delta=${jit - j0} ms codegen_compiles=${janinoN - g0} ====")
         jobs.values.foreach { j =>
           val ss = j.stages.flatMap(stages.get)
           val tt = ss.map(_.taskTimeMs).sum

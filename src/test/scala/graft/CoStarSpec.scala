@@ -129,25 +129,27 @@ class CoStarSpec extends SparkSpec {
     }
   }
 
-  test("CoStar.run at level 4 plus its two collects runs at most 10 Spark jobs") {
-    // one bounded collect per level (two jobs while the frontier is
-    // inlined, three once it is broadcast) plus the vertex-edge distinct;
-    // the persist/count-probe loop this replaced ran 36
+  test("CoStar.run at level 4 plus its two collects runs at most 6 Spark jobs") {
+    // two narrow jobs per driver-held level, and none for the collects:
+    // a driver-held result is a local relation
     val sc = spark.sparkContext
-    def jobs(): Int = {
+    def jobs(): (Int, Int) = {
       val group = s"costar-jobcount-${System.nanoTime()}"
       sc.setJobGroup(group, "job-count pin", interruptOnCancel = false)
+      def n = sc.statusTracker.getJobIdsForGroup(group).length
       try {
         val res = CoStar.run(spark, sparkEdges, topActor, CoStar.ActorQuery, 4)
+        val query = n
         res.vertices.collect()
         res.vertexEdges(CoStar.ActorQuery).collect()
-        sc.statusTracker.getJobIdsForGroup(group).length
+        (query, n - query)
       } finally sc.clearJobGroup()
     }
     jobs() // warm-up
-    val n = jobs()
-    info(s"jobs=$n")
-    assert(n <= 10, s"level-4 co-star query + collects ran $n jobs")
+    val (query, collects) = jobs()
+    info(s"query jobs=$query collect jobs=$collects")
+    assert(query <= 6, s"level-4 co-star query ran $query jobs")
+    assert(collects == 0, s"the two collects of a driver-held result ran $collects jobs")
   }
 
   /** Run `body` over a freshly ingested, caller-persisted edge table

@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import graft.query.BipartiteExpand
 import graft.query.BipartiteExpand.FrontierMode
@@ -9,7 +12,7 @@ import graft.query.BipartiteExpand.FrontierMode
   * while what they collect fits both ceilings, the first level that
   * would not switches to the shuffle path for the rest of the query,
   * every mode returns the identical vertex set with no cache residue,
-  * and a driver-held level costs one bounded collect.
+  * and a driver-held level costs two labelled jobs, one per hop.
   */
 class FrontierModeSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
@@ -87,12 +90,37 @@ class FrontierModeSpec extends SparkSpec {
     assert(spark.sharedState.cacheManager.isEmpty)
   }
 
-  test("a frontier too large to inline is broadcast from the driver: same answer as shuffle") {
+  /** The description of each Spark job `body` runs, in start order. */
+  private def jobsOf(body: => Unit): Seq[String] = {
+    val sc = spark.sparkContext
+    val descs = new ConcurrentHashMap[Int, String]()
+    val ended = ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        descs.put(e.jobId, String.valueOf(e.properties.getProperty("spark.job.description")))
+        ()
+      }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = { ended.add(e.jobId); () }
+    }
+    val group = s"frontier-jobs-${System.nanoTime()}"
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "job-count pin", interruptOnCancel = false)
+      try body finally sc.clearJobGroup()
+      val ids = sc.statusTracker.getJobIdsForGroup(group).toSeq.sorted
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!ids.forall(ended.contains) && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(ids.forall(ended.contains), "listener did not see every job end")
+      ids.map(descs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a 3000-vertex frontier costs 2 jobs a level, answers as Shuffle") {
     spark.catalog.clearCache() // see above
     import spark.implicits._
     // root 0 shares part i with customer i (i = 1..n); customer i shares
     // part n+i with customer n+i — level 2's frontier is n customers,
-    // above the inline limit, and every level stays small
+    // and every level stays small
     val n = 3000L
     val g = (1L to n).flatMap(i =>
       Seq((0L, i), (i, i), (i, n + i), (n + i, n + i))).toDF("cust", "part")
@@ -103,9 +131,16 @@ class FrontierModeSpec extends SparkSpec {
         x.edges.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet)
     }
     val modes = scala.collection.mutable.ArrayBuffer[(Int, Boolean)]()
-    val vs = BipartiteExpand.expand(spark, g, "cust", "part", lit(0L), 3,
-      onLevelMode = (l, b) => modes += ((l, b))).collect().map(_.getLong(0)).toSet
+    var vs = Set.empty[Long]
+    val jobs = jobsOf {
+      vs = BipartiteExpand.expand(spark, g, "cust", "part", lit(0L), 3,
+        onLevelMode = (l, b) => modes += ((l, b))).collect().map(_.getLong(0)).toSet
+    }
     assert(modes.toList == List((1, true), (2, true)), s"modes: $modes")
+    // one labelled job per hop, naming the hop's key-set size: the
+    // frontier for hop 1, the dst vertices hop 1 reached for hop 2
+    assert(jobs == Seq("bfs L1 hop1 keys=1", "bfs L1 hop2 keys=3000",
+      "bfs L2 hop1 keys=3000", "bfs L2 hop2 keys=6000"), s"jobs: $jobs")
     assert(vs == (0L to 2 * n).toSet)
     val (evs, es) = run(FrontierMode.Auto())
     assert(evs == vs)
@@ -114,30 +149,21 @@ class FrontierModeSpec extends SparkSpec {
     assert(spark.sharedState.cacheManager.isEmpty)
   }
 
-  test("a driver-held level costs one bounded collect: at most 4 jobs") {
+  test("a driver-held level costs exactly 2 jobs: one per hop") {
     // The stable signal is the MARGINAL cost of one more level: a
-    // driver-held level is one bounded collect — the frontier's
-    // broadcast from the driver, the hop-1 broadcast, the distinct's
-    // shuffle stage and the result stage, each an AQE job. The round-5
-    // shape spent two probe barriers per level, and the persist+count
-    // shape that followed it up to 10 jobs. A regression that adds a
-    // per-level probe or action trips this.
-    val sc = spark.sparkContext
-    def jobsAt(level: Int): Int = {
-      val group = s"frontier-jobcount-$level-${System.nanoTime()}"
-      sc.setJobGroup(group, "job-count pin", interruptOnCancel = false)
-      try {
-        BipartiteExpand.expand(spark, edges, "cust", "part", lit(0L), level,
-          mode = FrontierMode.Broadcast)
-        sc.statusTracker.getJobIdsForGroup(group).length
-      } finally sc.clearJobGroup()
-    }
+    // driver-held level is two narrow jobs, one per hop, with no join,
+    // exchange or broadcast exchange. A regression that adds a
+    // per-level probe, action or exchange trips this.
+    def jobsAt(level: Int): Int = jobsOf {
+      BipartiteExpand.expand(spark, edges, "cust", "part", lit(0L), level,
+        mode = FrontierMode.Broadcast)
+      ()
+    }.size
     jobsAt(3) // warm-up: JIT + parquet footer caches off the measurement
     val l3 = jobsAt(3)
     val l4 = jobsAt(4)
     info(s"jobs: level3=$l3 level4=$l4 marginal=${l4 - l3}")
-    assert(l4 - l3 >= 1 && l4 - l3 <= 4,
-      s"one extra BFS level cost ${l4 - l3} jobs (level3=$l3, level4=$l4) — " +
-      "expected one bounded collect")
+    assert(l4 - l3 == 2, s"one extra BFS level cost ${l4 - l3} jobs (level3=$l3, " +
+      s"level4=$l4) — expected one per hop")
   }
 }

@@ -75,23 +75,25 @@ object ImdbOracle {
 
   /** BFS with the reference's level semantics (level=1 ⇒ root only,
     * each level = one two-hop expansion), global visited dedup. */
-  def expand(edges: Set[(String, String)], root: String, byName: Boolean,
-      level: Int): Set[String] =
+  def expand[A](edges: Set[(A, A)], root: A, byName: Boolean, level: Int): Set[A] =
     expandWithEdges(edges, root, byName, level)._1
 
   /** The same BFS plus its vertex edges: every (u, v) pair, u ≠ v, with
-    * u in an expanded frontier and v sharing a neighbour with u. */
-  def expandWithEdges(edges: Set[(String, String)], root: String,
-      byName: Boolean, level: Int): (Set[String], Set[(String, String)]) = {
+    * u in an expanded frontier and v sharing a neighbour with u. Edges
+    * are (title, name) pairs, and `byName` roots the BFS at a name. A
+    * NULL key never matches, as in SQL: a NULL vertex can be reached,
+    * but nothing is reached through it. */
+  def expandWithEdges[A](edges: Set[(A, A)], root: A,
+      byName: Boolean, level: Int): (Set[A], Set[(A, A)]) = {
     val fwd = (if (byName) edges.map(e => (e._2, e._1)) else edges)
-      .groupMap(_._1)(_._2)
+      .filter(_._1 != null).groupMap(_._1)(_._2)
     val rev = (if (byName) edges else edges.map(e => (e._2, e._1)))
-      .groupMap(_._1)(_._2)
+      .filter(_._1 != null).groupMap(_._1)(_._2)
     val exists = fwd.contains(root)
     if (!exists) return (Set.empty, Set.empty)
     var visited = Set(root)
     var frontier = Set(root)
-    var found = Set.empty[(String, String)]
+    var found = Set.empty[(A, A)]
     for (_ <- 1 until level if frontier.nonEmpty) {
       val pairs = for (u <- frontier; m <- fwd.getOrElse(u, Set.empty);
         v <- rev.getOrElse(m, Set.empty) if v != u) yield (u, v)
